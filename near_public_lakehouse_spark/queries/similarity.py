@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -934,6 +932,8 @@ def kmeans_fit(
     iteration is the textbook Lloyd's-on-MapReduce shape (same as Spark
     MLlib's own KMeans driver loop).
     """
+    import pandas as pd
+
     spark = emb.sparkSession
     init = [
         [float(x) for x in r.embedding]

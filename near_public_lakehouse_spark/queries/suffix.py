@@ -252,7 +252,15 @@ def suffix_ranks(stream: DataFrame, spark: SparkSession) -> DataFrame:
     {SA_RANK_MULT} per round instead of 2: half the rank passes of plain
     doubling for the same fixpoint (lexicographic order on the sub-rank
     tuple IS the order on the concatenated prefix, missing sub-prefix =
-    rank 0 sorts first — the old coalesce(rank2, 0) rule)."""
+    rank 0 sorts first — the old coalesce(rank2, 0) rule).
+
+    Caveat: "smallest" is over a relabeled alphabet. When the xxhash64
+    token relabel is proven injective on the corpus (see below), ranks
+    follow the order of the hashed tokens, not lexicographic string
+    order. Only the neighbour and contiguity properties hold: suffixes
+    sharing a token prefix occupy one contiguous rank range, and the
+    ranks adjacent to a suffix are its suffix-array neighbours under the
+    relabeled order. Callers must not read ranks as string order."""
     from near_public_lakehouse_spark.queries.dedup import decision_parts
 
     n = stream.count()

@@ -68,13 +68,15 @@ def read_events_stream(
     spark: SparkSession, events_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-stream over parquet event files with the derived event-time
-    column. Schema comes from a batch peek (streaming sources need one)."""
+    column. Schema comes from a batch peek (streaming sources need one);
+    `ts` is normalized to BIGINT ns whichever parquet encoding it has, as
+    in `sources.tables.load_table`."""
+    from near_public_lakehouse_spark.functions.time import ns_to_micros
     from near_public_lakehouse_spark.session import configure_runtime
+    from near_public_lakehouse_spark.sources.tables import _normalize_events_ts
 
     configure_runtime(spark)
-    df = _file_stream(spark, events_dir, max_files_per_trigger)
-    from near_public_lakehouse_spark.functions.time import ns_to_micros
-
+    df = _normalize_events_ts(_file_stream(spark, events_dir, max_files_per_trigger))
     return df.withColumn("event_time", F.timestamp_micros(ns_to_micros("ts")))
 
 

@@ -1,15 +1,27 @@
-"""DLT-replacement pipeline runner: a DAG of table definitions executed in
-dependency order, batch or incrementally (SURVEY §4: the only "engine"
-pieces the rebuild needs, item (a)).
+"""DLT-replacement pipeline runner: a DAG of table definitions refreshed
+batch or incrementally (SURVEY §4: the only "engine" pieces the rebuild
+needs, item (a)).
 
-Each node declares (name, deps, build_fn); the runner topologically sorts
-and materializes each table to parquet partitioned by `block_date`. In
-incremental mode the fact-side bronze source is a Structured Streaming
+Each node declares (name, deps, build_fn); the runner materializes each
+table to parquet partitioned by `block_date`. Both modes share one
+ready-set scheduler, `Pipeline._run_dag`, the way a DLT update runs flows
+that do not depend on each other at the same time: a node is handed to a
+driver thread pool as soon as every in-pipeline dep has finished, so
+independent nodes plan, launch jobs, stream and commit concurrently on one
+SparkContext. The pool is as wide as the context's task slots
+(`defaultParallelism`); the ready set caps it in practice. Jobs share
+Spark's default FIFO scheduler, and every node inherits the caller's local
+properties (job group, description), so `cancelJobGroup` reaches all of
+them. On the first node failure no further node starts; the nodes already
+running drain (each awaits its own query), and that first error is
+re-raised.
+
+In incremental mode the fact-side bronze source is a Structured Streaming
 file/parquet stream with `trigger(availableNow=True)` and a checkpoint —
 the same resume contract as DLT's streaming live tables (T2/T3) — while
 dimension-side inputs are re-read per micro-batch (stream-static join; the
-blocks side of J1 is complete by the time a shard batch lands, because the
-runner orders block ingestion first).
+blocks side of J1 is complete by the time a shard batch lands, because a
+shard node starts only after `silver_blocks` has finished).
 
 Scale notes: availableNow + checkpoint gives exactly-once file processing
 without a scheduler; per-table checkpoints make every table independently
@@ -22,9 +34,11 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 @dataclass
@@ -124,8 +138,47 @@ class Pipeline:
             return self.spark.read.schema(schema).parquet(self.path(name))
         return self.spark.read.parquet(self.path(name))
 
+    def _run_dag(self, refresh: Callable[[TableDef], None]) -> None:
+        """Run `refresh(t)` for every node, each as soon as all of its
+        in-pipeline deps have finished, on `defaultParallelism` driver
+        threads. Each call inherits the caller's local properties as they
+        are when the node is submitted. On the first failure no further
+        node starts; the running ones drain, then that error is raised."""
+        order = self._topo_order()
+        waiting = {t.name: {d for d in t.deps if d in self.tables} for t in order}
+        dependents: dict[str, list[TableDef]] = {t.name: [] for t in order}
+        for t in order:
+            for d in waiting[t.name]:
+                dependents[d].append(t)
+        os.makedirs(self.out_dir, exist_ok=True)
+        running: dict[Future, TableDef] = {}
+        error: BaseException | None = None
+        width = self.spark.sparkContext.defaultParallelism
+        with ThreadPoolExecutor(width, thread_name_prefix="pipeline") as pool:
+
+            def submit(t: TableDef) -> None:
+                running[pool.submit(inheritable_thread_target(self.spark)(refresh), t)] = t
+
+            for t in order:
+                if not waiting[t.name]:
+                    submit(t)
+            while running:
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                finished = [running.pop(f) for f in done]
+                failures = (f.exception() for f in done if f.exception() is not None)
+                error = error or next(failures, None)
+                if error is not None:
+                    continue
+                for t in finished:
+                    for c in dependents[t.name]:
+                        waiting[c.name].discard(t.name)
+                        if not waiting[c.name]:
+                            submit(c)
+        if error is not None:
+            raise error
+
     def run_batch(self, sources: dict[str, DataFrame]) -> None:
-        """Full refresh: build every table in topo order, parquet it.
+        """Full refresh: build every table as its deps finish, parquet it.
 
         Stateful (apply-fn) nodes are refreshed into a FRESH path and
         swapped in: applying straight onto a previously populated target
@@ -139,7 +192,8 @@ class Pipeline:
         before the rebuild succeeded).
         """
         built: dict[str, DataFrame] = dict(sources)
-        for t in self._topo_order():
+
+        def refresh(t: TableDef) -> None:
             inputs = {d: built[d] for d in t.deps}
             df = t.build(self.spark, inputs)
             self._save_schema(t.name, df)
@@ -166,6 +220,8 @@ class Pipeline:
                 w.parquet(self.path(t.name))
             built[t.name] = self.read(t.name)
 
+        self._run_dag(refresh)
+
     def run_incremental(
         self,
         stream_sources: dict[str, Callable[[SparkSession, bool], DataFrame]],
@@ -173,15 +229,18 @@ class Pipeline:
         stream_root: str | None = None,
     ) -> None:
         """Incremental refresh: tables whose root source supports streaming
-        run as availableNow streams; every query drains before its
-        dependents start (topo order = DLT's DAG scheduling).
+        run as availableNow streams; the rest rebuild in batch. A node
+        starts once all its deps have finished (its stream drained, its
+        table written), so independent nodes refresh concurrently and a
+        stream-static join always reads a complete static side.
 
         `stream_sources[name](spark, streaming)` returns the source as a
         stream or batch frame. `stream_root` names the ONE dep treated as
         the streaming fact side per table (default: first dep that is a
         stream source); remaining deps are read as static parquet.
         """
-        for t in self._topo_order():
+
+        def refresh(t: TableDef) -> None:
             # the caller's explicit fact side wins (r13 review: the
             # parameter was documented but never consulted, so the first
             # stream-capable dep silently became the checkpointed stream)
@@ -219,7 +278,7 @@ class Pipeline:
                     if t.partition_by and t.partition_by in df.columns:
                         w = w.partitionBy(t.partition_by)
                     w.parquet(self.path(t.name))
-                continue
+                return
             if t.apply is not None:
                 apply_fn, spark, path = t.apply, self.spark, self.path(t.name)
 
@@ -243,3 +302,5 @@ class Pipeline:
                     writer = writer.partitionBy(t.partition_by)
                 q = writer.start()
             q.awaitTermination()
+
+        self._run_dag(refresh)

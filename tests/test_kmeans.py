@@ -82,3 +82,19 @@ def test_query_shape_and_coverage(spark):
     assert df.columns == ["vec_id", "cluster_id", "sq_dist"]
     assert {r.cluster_id for r in rows} <= set(range(KMEANS_K))
     assert all(r.sq_dist >= 0 for r in rows)
+
+
+def test_query_registry_imports_without_pandas():
+    """pandas is needed only when k-means or the PQ scorer runs: the
+    registry must load in an interpreter where `import pandas` fails."""
+    import subprocess
+    import sys
+
+    from tests.conftest import REPO
+
+    code = (
+        "import sys; sys.modules['pandas'] = None\n"
+        "from near_public_lakehouse_spark.queries import all_queries\n"
+        "assert 'kmeans_clusters' in all_queries()\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=str(REPO), check=True)

@@ -115,3 +115,22 @@ def test_sessionization_across_encodings(spark, encoded_dirs):
         if base is None:
             base = rows
         assert rows == base, enc
+
+
+def test_events_stream_reads_timestamp_us(spark, encoded_dirs, tmp_path):
+    """The streaming events reader normalizes `ts` like `load_table`: a
+    one-file timestamp[us] stream yields BIGINT ns and its event time."""
+    from near_public_lakehouse_spark.streaming import jobs
+
+    ev = jobs.read_events_stream(spark, os.path.join(encoded_dirs["us"], "events.parquet"))
+    assert isinstance(ev.schema["ts"].dataType, T.LongType)
+    jobs.run_to_memory(ev, "events_us_stream", str(tmp_path / "ck"))
+    got = {
+        r.event_id: (r.ts, r.event_time)
+        for r in spark.sql("SELECT event_id, ts, event_time FROM events_us_stream").collect()
+    }
+    batch = load_table(spark, encoded_dirs["us"], "events").selectExpr(
+        "event_id", "ts", "timestamp_micros(ts div 1000) AS event_time"
+    )
+    assert got == {r.event_id: (r.ts, r.event_time) for r in batch.collect()}
+    assert {k: v[0] for k, v in got.items()} == {r[0]: r[1] for r in _ROWS}
