@@ -39,54 +39,6 @@ def write_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def colocate(df: DataFrame, key: str) -> DataFrame:
-    """In-session analog of the bucketed layout for ITERATIVE jobs:
-    materialize `df` hash-partitioned + sorted by the per-round join key,
-    with the partitioning PRESERVED into the checkpoint's LogicalRDD, so
-    every subsequent join on `key` reads this side with NO Exchange and
-    NO Sort (GraphX's partition-once/ship-vertex-state strategy).
-
-    WHEN IT WINS — measured rule (sf0.1, local[32], HITS/PageRank A/B):
-    while the per-round state side (rank/label vector) fits a broadcast,
-    AQE converts each round's SortMergeJoin to a BroadcastHashJoin at
-    runtime, and that path beats this layout decisively (HITS half-round:
-    1.06 s AQE-broadcast vs 2.17 s co-located SMJ; full query 40 vs 550
-    task-seconds) — the SMJ's per-partition merge over 64 preserved
-    partitions costs more CPU than streaming the edge side through a
-    broadcast probe. So: do NOT colocate while the state side is
-    broadcastable. Colocate (or use the bucketed-write variants in
-    queries/graph.py) when the vertex state exceeds broadcast size — the
-    100 TB regime where re-shuffling the O(E) side every round is the
-    bottleneck and AQE has no broadcast escape hatch.
-
-    AQE must be OFF while the checkpoint materializes: AdaptiveSparkPlan's
-    final output partitioning is opaque (UnknownPartitioning), so a
-    checkpoint taken under AQE loses the co-location and every round
-    re-shuffles the O(E) side. The session flag is restored in a finally
-    block; plan shape is pinned in tests/test_plan_shapes.py
-    (colocated-graph-iteration pin).
-
-    THREAD-SAFETY CAVEAT: the AQE toggle is session-global, so any query
-    running CONCURRENTLY on the same SparkSession briefly executes
-    without AQE while the checkpoint materializes. Call from single-query
-    driver code (the iterative jobs here do), or give concurrent
-    workloads their own session."""
-    spark = df.sparkSession
-    raw_n = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n = int(raw_n)
-    except (TypeError, ValueError):
-        # platforms that set the conf to 'auto' (AQE-managed): fall back
-        # to the session default parallelism rather than crashing.
-        n = spark.sparkContext.defaultParallelism
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        return df.repartition(n, key).sortWithinPartitions(key).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
 def bucketed_join(
     spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
 ) -> DataFrame:

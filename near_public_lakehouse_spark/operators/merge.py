@@ -16,6 +16,7 @@ daily merge then costs O(days-touched), not O(history).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +29,7 @@ def table_exists(path: str) -> bool:
 
 
 def _recover(target_path: str) -> None:
-    """Re-install data parked by a crashed `_rewrite` swap.
+    """Re-install data parked by a crashed `_rewrite`/`_swap_in` swap.
 
     A crash between parking a live partition (or the unpartitioned target)
     and installing its replacement leaves that data ONLY in ``.__old__``.
@@ -65,6 +66,20 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def write_table(
+    df: DataFrame,
+    path: str,
+    partition_col: str | None = None,
+    options: dict[str, str] | None = None,
+) -> None:
+    """Overwrite the parquet table at `path` with `df`, hive-partitioned
+    on `partition_col` when given."""
+    writer = df.write.mode("overwrite").options(**(options or {}))
+    if partition_col:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(path)
+
+
 def _partition_fence(source: DataFrame, partition_col: str):
     """(touched partition values, null-safe fence column) for a keyed
     MERGE: one bounded driver collect of the source's distinct partition
@@ -81,6 +96,19 @@ def _partition_fence(source: DataFrame, partition_col: str):
     return parts, fence
 
 
+def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Null-fill each frame's missing columns so both carry the UNION of
+    the two schemas (a's column order first) — the sidecar drift policy
+    applied at the operator level."""
+    a_types = {f.name: f.dataType for f in a.schema.fields}
+    b_types = {f.name: f.dataType for f in b.schema.fields}
+    for c in [c for c in b.columns if c not in a_types]:
+        a = a.withColumn(c, F.lit(None).cast(b_types[c]))
+    for c in [c for c in a_types if c not in b_types]:
+        b = b.withColumn(c, F.lit(None).cast(a_types[c]))
+    return a, b.select(*a.columns)
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -89,15 +117,24 @@ def merge_upsert(
     partition_col: str | None = None,
     when_matched_update: bool = True,
     ignore_null_updates: bool = False,
+    sequence_by: str | None = None,
 ) -> list | None:
     """MERGE `source` into the parquet table at `target_path` on `keys`.
 
     - matched + `when_matched_update`: source row wins (per-column
       ``coalesce(src, tgt)`` when `ignore_null_updates`, the reference's
-      `IGNORE NULL UPDATES` — SCD tables.sql A8 / SURVEY §7 hard-parts).
+      `IGNORE NULL UPDATES` — SCD tables.sql A8 / SURVEY §7 hard-parts);
+      with `sequence_by`, only if its sequence is >= the stored one (the
+      SCD1 `SEQUENCE BY` guard, see `merged_frame`).
     - matched + not `when_matched_update`: insert-only MERGE (reference
       `WHEN NOT MATCHED INSERT *` variants).
     - unmatched: inserted.
+
+    Schema drift (T8): a source that carries columns the stored table
+    lacks (a widened stream after a restart), or lacks stored columns (a
+    narrowed one), is aligned by `merged_frame` to the UNION with
+    null-fill on both sides — the sidecar policy (drift-as-nulls, never
+    a drop).
 
     Source must be unique per key (pre-dedup with operators.scd.latest_by),
     and `partition_col` must be STABLE per key: the fence only rewrites
@@ -105,7 +142,7 @@ def merge_upsert(
     partition value would leave the stale copy live in its old partition
     (the same contract every partition-pruned Delta MERGE carries; the
     published tables satisfy it because block_date is deterministic per
-    key — r13 review).
+    key, and SCD1's bucket is a hash of the keys).
 
     Returns the distinct `partition_col` values the merge touched (the
     fence list), or None when unpartitioned / initial full write — callers
@@ -114,10 +151,7 @@ def merge_upsert(
     """
     _recover(target_path)
     if not table_exists(target_path):
-        writer = source.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(target_path)
+        write_table(source, target_path, partition_col)
         return None
 
     target = read_table(spark, target_path)
@@ -132,6 +166,7 @@ def merge_upsert(
         keys,
         when_matched_update=when_matched_update,
         ignore_null_updates=ignore_null_updates,
+        sequence_by=sequence_by,
     )
 
     _rewrite(spark, merged, target_path, partition_col)
@@ -144,19 +179,33 @@ def merged_frame(
     keys: list[str],
     when_matched_update: bool = True,
     ignore_null_updates: bool = False,
+    sequence_by: str | None = None,
 ) -> DataFrame:
     """The MERGE result as a DataFrame (shared by the path-based
-    `merge_upsert` and the versioned-table `versioned_upsert`)."""
+    `merge_upsert`, the log-authoritative `merge_upsert_logged` and the
+    versioned-table `versioned_upsert`); every one of them gets the same
+    drift policy here (`_align_columns`).
+
+    `sequence_by` is the SCD1 ``SEQUENCE BY`` guard: a source row
+    replaces a stored one only if its sequence is >= the stored sequence,
+    so out-of-order batches converge to the same state. A stored NULL
+    sequence LOSES to any arriving update (a bare ``s_seq >= NULL`` is
+    SQL NULL, which would make the NULL-sequence row immortal)."""
+    source, target = _align_columns(source, target)
     # Presence is tracked with explicit markers, NOT key nullability: the
     # join uses eqNullSafe, so a row whose first key column is legitimately
     # NULL still matches — keys[0].isNotNull() would misclassify it and
-    # silently drop the update.
+    # silently drop the update (or bypass the sequence guard).
     src = source.withColumn("__src__", F.lit(True)).alias("src")
     tgt = target.withColumn("__tgt__", F.lit(True)).alias("tgt")
     cond = [F.col(f"src.{k}").eqNullSafe(F.col(f"tgt.{k}")) for k in keys]
     joined = tgt.join(src, cond, "full_outer")
     src_present = F.col("src.__src__").isNotNull()
     tgt_present = F.col("tgt.__tgt__").isNotNull()
+    wins = src_present
+    if sequence_by is not None:
+        s_seq, t_seq = F.col(f"src.{sequence_by}"), F.col(f"tgt.{sequence_by}")
+        wins = ~tgt_present | (src_present & (t_seq.isNull() | (s_seq >= t_seq)))
 
     cols = []
     for c in source.columns:
@@ -169,10 +218,59 @@ def merged_frame(
             cols.append(F.when(tgt_present, t).otherwise(s).alias(c))
         elif ignore_null_updates:
             # matched: non-null source fields overwrite; else keep target
-            cols.append(F.coalesce(s, t).alias(c))
+            cols.append(F.when(wins, F.coalesce(s, t)).otherwise(t).alias(c))
         else:
-            cols.append(F.when(src_present, s).otherwise(t).alias(c))
+            cols.append(F.when(wins, s).otherwise(t).alias(c))
     return joined.select(*cols)
+
+
+def drop_stale(
+    spark: SparkSession,
+    target_path: str,
+    source: DataFrame,
+    keys: list[str],
+    sequence_by: str,
+    partition_col: str | None = None,
+) -> DataFrame:
+    """`source` without the rows that `merged_frame`'s ``SEQUENCE BY``
+    guard rejects against the stored table. `source` may hold several
+    rows per key: SCD1 IGNORE NULL UPDATES drops the stale ones before
+    its per-column pick, so a change older than the stored row supplies
+    no value. `partition_col` fences the stored read as in `merge_upsert`."""
+    _recover(target_path)
+    if not table_exists(target_path):
+        return source
+    target = read_table(spark, target_path)
+    if partition_col:
+        target = target.filter(_partition_fence(source, partition_col)[1])
+    src, tgt = source.alias("src"), target.select(*keys, sequence_by).alias("tgt")
+    s_seq, t_seq = F.col(f"src.{sequence_by}"), F.col(f"tgt.{sequence_by}")
+    cond = [F.col(f"src.{k}").eqNullSafe(F.col(f"tgt.{k}")) for k in keys]
+    loses = t_seq.isNotNull() & (s_seq.isNull() | (s_seq < t_seq))
+    return src.join(tgt, [*cond, loses], "left_anti")
+
+
+def _swap_in(tmp: str, target_path: str) -> None:
+    """Install the materialized dir `tmp` as `target_path` by renames:
+    park the live dir as ``.__old__``, move `tmp` into place, carry the
+    control-plane sidecars (``_``-prefixed: ``_delta_log``, schema
+    sidecars) that live inside the table root but are not produced by the
+    rewrite, then drop the parked copy. A target that does not exist yet
+    is simply renamed into place. A crash between park and install leaves
+    the parked dir as the only copy, which `_recover` re-installs — so
+    callers run `_recover` before materializing `tmp`, and any parked dir
+    left at this point is stale."""
+    parked = target_path.rstrip("/") + ".__old__"
+    shutil.rmtree(parked, ignore_errors=True)
+    if not os.path.isdir(target_path):
+        os.rename(tmp, target_path)
+        return
+    os.rename(target_path, parked)
+    os.rename(tmp, target_path)
+    for name in os.listdir(parked):
+        if name.startswith("_") and not os.path.exists(os.path.join(target_path, name)):
+            os.rename(os.path.join(parked, name), os.path.join(target_path, name))
+    shutil.rmtree(parked, ignore_errors=True)
 
 
 def _rewrite(
@@ -189,7 +287,8 @@ def _rewrite(
     — never written onto the path it reads. The swap is then pure
     filesystem renames with no Spark job in flight:
 
-    - unpartitioned: one directory rename (old parked, then dropped);
+    - unpartitioned: one directory rename (`_swap_in`: old parked, then
+      dropped);
     - partitioned: one rename per touched partition, with the old
       partition parked OUTSIDE the table root (a parked dir named
       ``col=value.__old__`` inside the root would be misparsed as a
@@ -201,8 +300,6 @@ def _rewrite(
     wrote directly onto the table while reading it and leaked the session
     conf `spark.sql.sources.partitionOverwriteMode=dynamic`.
     """
-    import shutil
-
     base = target_path.rstrip("/")
     tmp = base + ".__merge_tmp__"
     parked = base + ".__old__"
@@ -212,27 +309,10 @@ def _rewrite(
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(parked, ignore_errors=True)
 
-    writer = df.write.mode("overwrite")
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    for k, v in (writer_options or {}).items():
-        writer = writer.option(k, v)
-    writer.parquet(tmp)
+    write_table(df, tmp, partition_col, writer_options)
 
     if not partition_col:
-        os.rename(target_path, parked)
-        os.rename(tmp, target_path)
-        # Control-plane sidecars (``_delta_log``, schema sidecars) live
-        # inside the table root but are not produced by the rewrite —
-        # carry them across the swap before the old data is dropped.
-        for name in os.listdir(parked):
-            if name.startswith("_") and not os.path.exists(
-                os.path.join(target_path, name)
-            ):
-                os.rename(
-                    os.path.join(parked, name), os.path.join(target_path, name)
-                )
-        shutil.rmtree(parked, ignore_errors=True)
+        _swap_in(tmp, target_path)
         return
 
     os.makedirs(parked, exist_ok=True)
@@ -328,15 +408,10 @@ def _install_in_place(
     replaces, same rule as `_rewrite`), then move the part-files into the
     live partition dirs WITHOUT touching existing files. Returns the
     installed table-relative paths, sorted."""
-    import shutil
-
     base = table_dir.rstrip("/")
     tmp = base + ".__merge_tmp__"
     shutil.rmtree(tmp, ignore_errors=True)
-    writer = df.write.mode("overwrite")
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(tmp)
+    write_table(df, tmp, partition_col)
 
     installed: list[str] = []
     if partition_col:

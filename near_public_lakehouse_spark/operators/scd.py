@@ -2,13 +2,24 @@
 ``APPLY CHANGES INTO ... KEYS (...) SEQUENCE BY ... STORED AS SCD TYPE 1``
 (reference A8 — SCD tables.sql:14-39,53-77,90-116,129-149).
 
-Semantics reproduced:
+Semantics reproduced (SURVEY §2.5: an arg-max per key followed by the M1
+MERGE with a null-preserving update):
 - KEYS / SEQUENCE BY: within each micro-batch the row with the highest
   sequence value wins (arg-max via row_number, reference T7); a stored row
   is only replaced by a source row with sequence >= stored sequence, so
   out-of-order batches converge to the same state.
-- IGNORE NULL UPDATES: per-column ``coalesce(new, old)`` on update
-  (SURVEY §7 hard-parts list).
+- IGNORE NULL UPDATES: on update ``coalesce(new, old)`` per column
+  (SURVEY §7 hard-parts list). Inside a batch the changes the guard
+  rejects are dropped, then each column takes its latest non-NULL value:
+  the one-change-at-a-time fold, so an in-order feed yields the same row
+  in one batch or many. A coalescing fold is not order-free, so under
+  this option only in-order feeds converge (a late change older than the
+  stored row is dropped, not folded in beneath it).
+
+The MERGE itself is `operators.merge.merge_upsert` with its
+``sequence_by`` guard — the one keyed-MERGE core (combine rule, schema
+drift policy, partition fence, crash-safe swap) that the publish nodes
+use too.
 
 Streaming: `apply_changes_stream` wraps the batch core in foreachBatch —
 the exact pattern SURVEY §4 prescribes for the DLT replacement.
@@ -23,7 +34,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from near_public_lakehouse_spark.operators.merge import _recover, read_table, table_exists
+from near_public_lakehouse_spark.operators.merge import (
+    _align_columns,
+    _recover,
+    _rewrite,
+    drop_stale,
+    merge_upsert,
+    read_table,
+    table_exists,
+    write_table,
+)
+
 
 def _orderable(dt) -> bool:
     """Spark can ORDER BY atomics, arrays and structs of orderables —
@@ -39,35 +60,50 @@ def _orderable(dt) -> bool:
     return True
 
 
-def latest_by(df: DataFrame, keys: list[str], sequence_by: str) -> DataFrame:
-    """Arg-max dedup: latest row per key by the sequence column (ties broken
+def _latest_first(df: DataFrame, keys: list[str], sequence_by: str) -> Window:
+    """Per-key window, latest row first: sequence desc, ties broken
     deterministically by the remaining ORDERABLE columns — map-typed
-    columns can't ORDER BY and are skipped, r13 review)."""
+    columns can't ORDER BY and are skipped."""
     types = {f.name: f.dataType for f in df.schema.fields}
     tiebreak = [
         c
         for c in df.columns
         if c not in keys and c != sequence_by and _orderable(types[c])
     ]
-    w = Window.partitionBy(*keys).orderBy(
+    return Window.partitionBy(*keys).orderBy(
         F.desc(sequence_by), *[F.desc(c) for c in tiebreak]
     )
+
+
+def latest_by(df: DataFrame, keys: list[str], sequence_by: str) -> DataFrame:
+    """Arg-max dedup: latest row per key by the sequence column, ties
+    broken deterministically (`_latest_first`)."""
+    w = _latest_first(df, keys, sequence_by)
     return df.withColumn("__rn__", F.row_number().over(w)).filter(F.col("__rn__") == 1).drop(
         "__rn__"
     )
 
 
-def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Null-fill each frame's missing columns so both carry the UNION of
-    the two schemas (a's column order first) — the sidecar drift policy
-    applied at the operator level."""
-    a_types = {f.name: f.dataType for f in a.schema.fields}
-    b_types = {f.name: f.dataType for f in b.schema.fields}
-    for c in [c for c in b.columns if c not in a_types]:
-        a = a.withColumn(c, F.lit(None).cast(b_types[c]))
-    for c in [c for c in a_types if c not in b_types]:
-        b = b.withColumn(c, F.lit(None).cast(a_types[c]))
-    return a, b.select(*a.columns)
+def _latest_non_null_by(df: DataFrame, keys: list[str], sequence_by: str) -> DataFrame:
+    """`latest_by` under IGNORE NULL UPDATES: one row per key whose every
+    other column holds its latest non-NULL value in the batch (same order
+    as `latest_by`); the sequence column is the max. Over the changes
+    `merge.drop_stale` admits, this equals folding them one at a time with
+    ``coalesce(new, old)``, so batch splits of an in-order feed agree (the
+    latest row alone would lose a value that a later change leaves NULL,
+    e.g. the permission of a key that is added, then deleted)."""
+    w = _latest_first(df, keys, sequence_by)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cols = [
+        F.col(c) if c in keys or c == sequence_by
+        else F.first(c, ignorenulls=True).over(whole).alias(c)
+        for c in df.columns
+    ]
+    return (
+        df.select(*cols, F.row_number().over(w).alias("__rn__"))
+        .filter(F.col("__rn__") == 1)
+        .drop("__rn__")
+    )
 
 
 def apply_changes(
@@ -79,79 +115,37 @@ def apply_changes(
     ignore_null_updates: bool = False,
     n_buckets: int | None = None,
 ) -> None:
-    """Batch core: upsert `updates` into the SCD1 table at `target_path`.
+    """Batch core: upsert `updates` into the SCD1 table at `target_path`:
+    the per-key latest change, MERGEd by `merge_upsert` under the
+    ``SEQUENCE BY`` guard (with IGNORE NULL UPDATES, the per-column latest
+    non-NULL values of the changes the guard admits).
 
     ``n_buckets`` is the 100 TB path SCD2 already had (r13 review: SCD1
     rewrote its ENTIRE state per micro-batch): the table is laid out
     partitioned on a key-hash bucket, a batch reads and rewrites ONLY the
-    buckets its keys touch, untouched partition dirs are never opened.
-    Same layout-constant contract as `apply_changes_scd2`."""
-    src = latest_by(updates, keys, sequence_by)
-    _recover(target_path)
-    if not table_exists(target_path):
-        if n_buckets:
-            src.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets)).write.mode(
-                "overwrite"
-            ).partitionBy(BUCKET_COL).parquet(target_path)
-        else:
-            src.write.mode("overwrite").parquet(target_path)
-        return
-
+    buckets its keys touch (merge_upsert's partition fence; the bucket is
+    a hash of the keys, so it is stable per key), untouched partition
+    dirs are never opened. Same layout-constant contract as
+    `apply_changes_scd2`."""
+    part = BUCKET_COL if n_buckets else None
+    src = updates
     if n_buckets:
-        touched = [
-            r[0]
-            for r in src.select(_bucket_of(keys, n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        tgt = (
-            read_table(spark, target_path)
-            .filter(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-            .drop(BUCKET_COL)
-        )
+        src = src.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
+    if ignore_null_updates:
+        # a change the guard rejects must not supply a column value
+        src = drop_stale(spark, target_path, src, keys, sequence_by, part)
+        src = _latest_non_null_by(src, keys, sequence_by)
     else:
-        tgt = read_table(spark, target_path)
-    # Schema drift (T8, r13 review): after a restart with a widened
-    # stream schema the batch carries columns the stored table lacks
-    # (and vice versa after a source narrowed) — align both sides to the
-    # UNION with null-fill, the sidecar policy (drift-as-nulls, never a
-    # drop), instead of failing analysis or silently dropping data.
-    src, tgt = _align_columns(src, tgt)
-    out_cols = list(src.columns)
-    # Explicit presence markers, not key nullability: eqNullSafe join keys
-    # mean a legitimately-NULL key column still matches, and keys[0].isNull()
-    # would then bypass the sequence guard (see merge_upsert).
-    j = tgt.withColumn("__tgt__", F.lit(True)).alias("t").join(
-        src.withColumn("__src__", F.lit(True)).alias("s"),
-        [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys],
-        "full_outer",
+        src = latest_by(src, keys, sequence_by)
+    merge_upsert(
+        spark,
+        target_path,
+        src,
+        keys,
+        partition_col=part,
+        ignore_null_updates=ignore_null_updates,
+        sequence_by=sequence_by,
     )
-    s_seq, t_seq = F.col(f"s.{sequence_by}"), F.col(f"t.{sequence_by}")
-    # A source row applies if the key is new, or its sequence is >= stored.
-    # NULL guard (r13 review): a stored NULL sequence must LOSE to any
-    # arriving update — bare `s_seq >= NULL` is SQL NULL, which made
-    # `False | NULL` falsy and the NULL-sequence row immortal.
-    src_wins = F.col("t.__tgt__").isNull() | (
-        F.col("s.__src__").isNotNull() & (t_seq.isNull() | (s_seq >= t_seq))
-    )
-    out = []
-    for c in out_cols:
-        s, t = F.col(f"s.{c}"), F.col(f"t.{c}")
-        if c in keys:
-            out.append(F.coalesce(s, t).alias(c))
-        elif ignore_null_updates:
-            out.append(F.when(src_wins, F.coalesce(s, t)).otherwise(t).alias(c))
-        else:
-            out.append(F.when(src_wins, s).otherwise(t).alias(c))
-    merged = j.select(*out)
-
-    from near_public_lakehouse_spark.operators.merge import _rewrite
-
-    if n_buckets:
-        merged = merged.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
-        _rewrite(spark, merged, target_path, BUCKET_COL)
-    else:
-        _rewrite(spark, merged, target_path, None)
 
 
 def apply_changes_stream(
@@ -322,12 +316,8 @@ def apply_changes_scd2(
         hist = scd2_history(updates, keys, sequence_by)
         if n_buckets:
             hist = hist.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
-            hist.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(target_path)
-        else:
-            hist.write.mode("overwrite").parquet(target_path)
+        write_table(hist, target_path, BUCKET_COL if n_buckets else None)
         return
-
-    from near_public_lakehouse_spark.operators.merge import _rewrite
 
     if not n_buckets:
         stored = _stored_changes(read_table(spark, target_path))

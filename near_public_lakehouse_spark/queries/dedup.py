@@ -1011,16 +1011,16 @@ def _min_label_cc(edges: DataFrame) -> DataFrame:
     sym = edges_c.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
         edges_c.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    # Plain checkpoint, not `operators.bucketing.colocate`: while the
-    # (id, lab) state fits a broadcast, each round's join runs broadcast
-    # (bound explicitly below), which measured FASTER than the
-    # co-located SMJ layout (see the colocate docstring for the numbers
-    # and the at-scale regime where co-location wins instead).
+    # Plain checkpoint, not a co-located layout: while the (id, lab)
+    # state fits a broadcast, each round's join runs broadcast (bound
+    # explicitly below), which measured FASTER than a co-located SMJ
+    # layout; beyond it the merge regime below takes `_merge_layout`.
     sym = sym.localCheckpoint()
     # Narrow the round-loop input to the row-count width (guide §2.2):
     # the checkpoint inherits the verify pipeline's CPU-spreading width
     # (132 partitions at bench scale for a ~12-partition-sized frame).
-    sym = narrowed_ckpt(sym, sym.count())
+    n_sym = sym.count()
+    sym = narrowed_ckpt(sym, n_sym)
     labels = sym.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("lab")
     )
@@ -1049,7 +1049,7 @@ def _min_label_cc(edges: DataFrame) -> DataFrame:
         # EAGERLY (the Observation forces each round), so unlike the
         # lazy graph rounds nothing references the layout once labels
         # converge.
-        sym = _merge_layout(sym, "src", sym.count())
+        sym = _merge_layout(sym, "src", n_sym)
     prev_sum: int | None = None
     for i in range(50):
         state = F.broadcast(labels) if bcast else labels

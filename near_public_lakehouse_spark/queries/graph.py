@@ -318,10 +318,11 @@ def _pr_setup(pairs: DataFrame) -> tuple[DataFrame, DataFrame, float, bool]:
     # Fold the degree in ONCE: without this checkpoint every round
     # recomputes the O(E) degree aggregate + join (measured 130 task-s /
     # 196 MB shuffle vs 66 task-s / 100 MB at sf0.1 — a 1.4x wall win).
-    # Plain checkpoint, NOT `colocate`: AQE runtime-broadcasts the
-    # O(nodes) rank side each round, which beats the co-located SMJ while
-    # the state fits a broadcast (see operators/bucketing.colocate for
-    # the measured trade and the regime where co-location wins).
+    # Plain checkpoint, NOT a co-located layout: AQE runtime-broadcasts
+    # the O(nodes) rank side each round, which beats the co-located SMJ
+    # while the state fits a broadcast (measured: HITS 40 vs 550 task-s,
+    # COVERAGE item 72); beyond it `_merge_layout` is the keyed layout,
+    # probe-rejected for PageRank below.
     # The rounds only ever consume w/deg (r15 optimization round, guide
     # §2.3 narrower types): pre-dividing it into ONE double drops a
     # column from the checkpoint every round re-reads AND the per-edge
@@ -543,7 +544,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow checkpoint is the available win.
     from near_public_lakehouse_spark.queries.dedup import narrowed_ckpt
 
-    edges = narrowed_ckpt(edges, edges.count())
+    n_edges = edges.count()
+    edges = narrowed_ckpt(edges, n_edges)
     # Regime pick for the frontier join (r15 optimization round — BFS
     # previously had NO pick, so every round was planned as SMJ off the
     # checkpoint's MAX size estimate and shuffled the full edge set; the
@@ -551,17 +553,23 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the frontier side could broadcast). The frontier is bounded by the
     # node count; approx_count_distinct over the already-materialized
     # edge blocks is one cheap bounded aggregate, same pattern as
-    # `_pr_setup`/`_hits_regimes`.
-    n_nodes = int(edges.agg(F.approx_count_distinct("src")).first()[0] or 0)
+    # `_hits_regimes`. 1.1x headroom as in `_star_cc`: the ~5% rsd
+    # estimate can UNDERcount, and it binds a hard F.broadcast.
+    n_nodes = int(1.1 * int(edges.agg(F.approx_count_distinct("src")).first()[0] or 0))
     bcast = _state_broadcastable(spark, n_nodes, n_nodes * 8)
-    if not bcast:
-        # merge regime: per-round SMJ — pre-shape the static edge side
-        # once so only the frontier exchanges/sorts per round (r16)
-        edges = _merge_layout(edges, "src", edges.count())
     dist = inline_rows_df(
         spark, [(BFS_SOURCE_CODE, 0)], [("node", "bigint"), ("hops", "bigint")]
     )
-    return _bfs_output(_bfs_rounds(edges, dist, broadcast_state=bcast))
+    if bcast:
+        return _bfs_output(_bfs_rounds(edges, dist, broadcast_state=True))
+    # merge regime: per-round SMJ — pre-shape the static edge side once so
+    # only the frontier exchanges/sorts per round (r16). The rounds are
+    # lazy, so materialize the final state before dropping the cached
+    # layout; otherwise it outlives the query in the session's cache.
+    layout = _merge_layout(edges, "src", n_edges)
+    dist = _bfs_rounds(layout, dist, broadcast_state=False).localCheckpoint()
+    layout.unpersist()
+    return _bfs_output(dist)
 
 
 def _bfs_round(
@@ -739,17 +747,18 @@ def link_analysis_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         if bcast_hub
         else _merge_layout(edges, "cust", n_edges)
     )
-    out = _hits_output(*_hits_rounds(e_h, e_a, auth, bcast_auth, bcast_hub))
-    if bcast_auth and bcast_hub:
-        # Driver-paced loop: every layout read happened inside the
-        # per-half collects above, and the returned frames are literal
-        # state — the cached layouts have no remaining consumer, so drop
-        # them now instead of leaking two InMemoryRelations per
-        # invocation into the session (VERDICT r15 item 3). Mixed/merge
-        # regimes return plans that still read the layouts and keep them.
-        for lay in (e_h, e_a):
-            lay.unpersist()
-    return out
+    hub, auth = _hits_rounds(e_h, e_a, auth, bcast_auth, bcast_hub)
+    if not (bcast_auth and bcast_hub):
+        # Mixed/merge regimes return lazy plans that still read the
+        # layouts: materialize the final state first. (The driver-paced
+        # loop already read every layout inside its per-half collects
+        # and returns literal state.)
+        hub, auth = hub.localCheckpoint(), auth.localCheckpoint()
+    # The cached layouts have no remaining consumer: drop them instead of
+    # leaking two InMemoryRelations per invocation into the session.
+    for lay in (e_h, e_a):
+        lay.unpersist()
+    return _hits_output(hub, auth)
 
 
 def _hits_regimes(edges: DataFrame) -> tuple[bool, bool]:
@@ -769,9 +778,12 @@ def _hits_regimes(edges: DataFrame) -> tuple[bool, bool]:
         len_of("supp").alias("ls"),
     ).collect()[0]
     spark = edges.sparkSession
+    # 1.1x headroom on the approximate counts, as in `_star_cc`: the ~5%
+    # rsd estimate can UNDERcount, and each pick binds a hard F.broadcast.
+    ns, nc = int(1.1 * int(s["ns"])), int(1.1 * int(s["nc"]))
     return (
-        _state_broadcastable(spark, int(s["ns"]), int(s["ns"]) * int(s["ls"])),
-        _state_broadcastable(spark, int(s["nc"]), int(s["nc"]) * int(s["lc"])),
+        _state_broadcastable(spark, ns, ns * int(s["ls"])),
+        _state_broadcastable(spark, nc, nc * int(s["lc"])),
     )
 
 

@@ -23,6 +23,13 @@ dimension-side inputs are re-read per micro-batch (stream-static join; the
 blocks side of J1 is complete by the time a shard batch lands, because a
 shard node starts only after `silver_blocks` has finished).
 
+Stateful nodes (an `apply` fn: the SCD1 APPLY CHANGES tables and the
+insert-only publish tables) all fold through the one keyed-MERGE core,
+`operators.merge.merge_upsert`. A full refresh applies such a node into a
+fresh sibling dir and installs it with that core's crash-safe swap
+(`merge._recover` first, then `merge._swap_in`); stateless nodes are
+overwritten in both modes by `Pipeline._overwrite`.
+
 Scale notes: availableNow + checkpoint gives exactly-once file processing
 without a scheduler; per-table checkpoints make every table independently
 restartable; `maxFilesPerTrigger` bounds batch size. foreachBatch nodes
@@ -33,12 +40,15 @@ which is how OSS expresses APPLY CHANGES (SURVEY §2.5 A8).
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
+
+from near_public_lakehouse_spark.operators.merge import _recover, _swap_in, write_table
 
 
 @dataclass
@@ -177,19 +187,25 @@ class Pipeline:
         if error is not None:
             raise error
 
+    def _overwrite(self, t: TableDef, df: DataFrame) -> None:
+        """Stateless node: replace the table with `df`, partitioned by the
+        node's `partition_by` column when the frame carries it."""
+        part = t.partition_by if t.partition_by in df.columns else None
+        write_table(df, self.path(t.name), part)
+
     def run_batch(self, sources: dict[str, DataFrame]) -> None:
         """Full refresh: build every table as its deps finish, parquet it.
 
         Stateful (apply-fn) nodes are refreshed into a FRESH path and
         swapped in: applying straight onto a previously populated target
         would fold the new change feed into the old state — rows deleted
-        upstream would survive a "full refresh". The swap is
-        park-then-install renames with recovery at entry: a crash between
-        the two renames leaves the old table PARKED, and the next run
-        restores it before doing anything else (the merge._recover
-        discipline — r13 review: the prior form had a window where
-        neither copy existed and the next run deleted the parked copy
-        before the rebuild succeeded).
+        upstream would survive a "full refresh". The swap is the MERGE
+        core's own (`merge._recover` at entry, then `merge._swap_in`'s
+        park-then-install renames): a crash between the two renames
+        leaves the old table PARKED, and the next run restores it before
+        doing anything else (an earlier form had a window
+        where neither copy existed and the next run deleted the parked
+        copy before the rebuild succeeded).
         """
         built: dict[str, DataFrame] = dict(sources)
 
@@ -198,26 +214,14 @@ class Pipeline:
             df = t.build(self.spark, inputs)
             self._save_schema(t.name, df)
             if t.apply is not None:
-                import shutil
-
                 path = self.path(t.name)
-                tmp, parked = path + ".__refresh__", path + ".__old__"
-                # recovery: a parked dir with no live table is the only
-                # copy (crash between park and install) — restore first
-                if os.path.isdir(parked) and not os.path.isdir(path):
-                    os.rename(parked, path)
+                tmp = path + ".__refresh__"
+                _recover(path)
                 shutil.rmtree(tmp, ignore_errors=True)
                 t.apply(self.spark, df, tmp)
-                shutil.rmtree(parked, ignore_errors=True)
-                if os.path.isdir(path):
-                    os.rename(path, parked)
-                os.rename(tmp, path)
-                shutil.rmtree(parked, ignore_errors=True)
+                _swap_in(tmp, path)
             else:
-                w = df.write.mode("overwrite")
-                if t.partition_by and t.partition_by in df.columns:
-                    w = w.partitionBy(t.partition_by)
-                w.parquet(self.path(t.name))
+                self._overwrite(t, df)
             built[t.name] = self.read(t.name)
 
         self._run_dag(refresh)
@@ -274,10 +278,7 @@ class Pipeline:
                 if t.apply is not None:
                     t.apply(self.spark, df, self.path(t.name))
                 else:
-                    w = df.write.mode("overwrite")
-                    if t.partition_by and t.partition_by in df.columns:
-                        w = w.partitionBy(t.partition_by)
-                    w.parquet(self.path(t.name))
+                    self._overwrite(t, df)
                 return
             if t.apply is not None:
                 apply_fn, spark, path = t.apply, self.spark, self.path(t.name)

@@ -303,6 +303,7 @@ def test_incremental_matches_batch(spark, raw_dir, pipe, tmp_path_factory):
         return {repr(r) for r in df.select(cols).collect()}
 
     for table in [
+        "silver_access_keys",
         "public_block_chunks",
         "public_actions",
         "public_logs",

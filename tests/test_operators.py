@@ -672,3 +672,142 @@ def test_scd1_bucketed_touches_only_affected_partitions(spark, target):
     assert len(changed) == 1  # exactly the touched bucket
     got = {r.k: r.v for r in spark.read.parquet(target).collect()}
     assert got[5] == "w" and len(got) == 64
+
+
+# --- one keyed-MERGE core: SEQUENCE BY guard and schema drift ---------------
+
+
+def test_merge_upsert_sequence_guard(spark, target):
+    """`merge_upsert(sequence_by=...)` is the SCD1 guard: a stale update
+    loses, a stored NULL sequence loses to any update, and an EQUAL
+    sequence wins (SEQUENCE BY is >=, so a replayed batch re-applies)."""
+    schema = "k int, v string, seq int"
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(1, "a", 10), (2, "b", None), (3, "c", 30)], schema),
+        ["k"],
+    )
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(1, "stale", 5), (2, "B", 1), (3, "C", 30)], schema),
+        ["k"],
+        sequence_by="seq",
+    )
+    assert _rows(spark, target) == {1: ("a", 10), 2: ("B", 1), 3: ("C", 30)}
+
+
+def test_merge_upsert_sequence_guard_ignore_null_updates(spark, target):
+    """With the guard, IGNORE NULL UPDATES coalesces only for a winning
+    source row; a stale row changes nothing, not even the target's NULLs."""
+    schema = "k int, v string, w string, seq int"
+    merge_upsert(
+        spark, target, spark.createDataFrame([(1, "a", None, 10)], schema), ["k"]
+    )
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(1, None, "stale", 5)], schema),
+        ["k"],
+        ignore_null_updates=True,
+        sequence_by="seq",
+    )
+    r = spark.read.parquet(target).collect()[0]
+    assert (r.v, r.w, r.seq) == ("a", None, 10)
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(1, None, "x", 20)], schema),
+        ["k"],
+        ignore_null_updates=True,
+        sequence_by="seq",
+    )
+    r = spark.read.parquet(target).collect()[0]
+    assert (r.v, r.w, r.seq) == ("a", "x", 20)
+
+
+def test_merge_upsert_null_fills_drifted_schema(spark, target):
+    """Schema drift in either direction null-fills (the sidecar policy)
+    instead of failing analysis or dropping stored columns: a widened
+    source adds a column NULL for the stored rows, and a narrowed source
+    keeps the stored column, NULL for its new rows."""
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
+        ["k"],
+    )
+    # widened: the source carries `x`, the stored table does not
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(2, "B", 7), (3, "c", 8)], "k int, v string, x int"),
+        ["k"],
+    )
+    got = {r.k: (r.v, r.x) for r in spark.read.parquet(target).collect()}
+    assert got == {1: ("a", None), 2: ("B", 7), 3: ("c", 8)}
+    # narrowed: the source lacks `v`, the stored table keeps it
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(1, 5), (4, 6)], "k int, x int"),
+        ["k"],
+    )
+    got = {r.k: (r.v, r.x) for r in spark.read.parquet(target).collect()}
+    assert got == {1: (None, 5), 2: ("B", 7), 3: ("c", 8), 4: (None, 6)}
+
+
+def test_scd1_ignore_null_updates_one_batch_equals_two(spark, tmp_path):
+    """IGNORE NULL UPDATES inside one batch: an ADD (perm set) then a
+    DELETE (perm NULL) of the same key must store the same row whether
+    the two changes arrive in one batch or two — each column keeps its
+    latest non-NULL value, the sequence is the max."""
+    schema = "k int, active boolean, perm string, seq int"
+    changes = [(1, True, "FULL_ACCESS", 1), (1, False, None, 2), (2, True, "FC", 1)]
+    one, two = str(tmp_path / "one"), str(tmp_path / "two")
+
+    def apply(path, rows):
+        apply_changes(
+            spark,
+            path,
+            spark.createDataFrame(rows, schema),
+            ["k"],
+            "seq",
+            ignore_null_updates=True,
+        )
+
+    apply(one, changes)
+    apply(two, changes[:1] + changes[2:])
+    apply(two, changes[1:2])
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    assert rows(one) == rows(two) == [(1, False, "FULL_ACCESS", 2), (2, True, "FC", 1)]
+
+
+@pytest.mark.parametrize("n_buckets", [None, 4])
+def test_scd1_ignore_null_updates_stale_change_supplies_nothing(spark, tmp_path, n_buckets):
+    """A change older than the stored row is dropped before the in-batch
+    per-column pick: stored X@5 plus one batch [OLD@3, NULL@7] stores
+    X@7, as folding the two changes one at a time under the guard does
+    (OLD@3 loses, NULL@7 wins and coalesces to the stored X)."""
+    schema = "k int, perm string, seq int"
+    path = str(tmp_path / "t")
+
+    def apply(rows):
+        apply_changes(
+            spark,
+            path,
+            spark.createDataFrame(rows, schema),
+            ["k"],
+            "seq",
+            ignore_null_updates=True,
+            n_buckets=n_buckets,
+        )
+
+    apply([(1, "X", 5), (2, "Y", 5)])
+    apply([(1, "OLD", 3), (1, None, 7), (2, "NEW", 6), (3, None, 1), (3, "Z", 0)])
+    got = sorted((r.k, r.perm, r.seq) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "X", 7), (2, "NEW", 6), (3, "Z", 1)]

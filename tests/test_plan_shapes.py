@@ -519,78 +519,6 @@ def test_suffix_offsets_have_no_single_partition_window(spark):
         acc += r.v
 
 
-def test_colocated_graph_iteration_is_edge_exchange_free(spark):
-    """The registry graph queries' in-session analog of the bucketed
-    layout: `_colocate` (repartition+sort+localCheckpoint with AQE off so
-    the LogicalRDD keeps its HashPartitioning/ordering) makes every
-    iteration's edge side Exchange-free AND Sort-free — a PageRank round
-    has exactly TWO Exchanges (the O(nodes) rank side + the post-aggregate
-    partial-sum exchange), never the O(E) edge re-shuffle that a plain
-    localCheckpoint (UnknownPartitioning under AQE) forces each round.
-    NOTE the registry graph queries deliberately do NOT use this layout —
-    AQE's runtime broadcast of the small state side beats it while the
-    state is broadcastable (measured rule in the colocate docstring);
-    this pin validates the MECHANISM for the at-scale regime."""
-    from near_public_lakehouse_spark.operators.bucketing import colocate
-
-    edges = (
-        spark.range(0, 2000)
-        .select(
-            (F.col("id") % 97).cast("string").alias("src"),
-            (F.col("id") % 31).cast("string").alias("dst"),
-            F.lit(1.0).alias("w"),
-            F.lit(2.0).alias("deg"),
-        )
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        contrib = colocate(edges, "src")
-        rank = (
-            contrib.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.lit(0.01).alias("rank"))
-        )
-        one_round = (
-            contrib.join(rank.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("w") / F.col("deg") * F.col("rank")).alias("rank"))
-        )
-        plan = _formatted(one_round)
-        # never the O(E) edge re-shuffle: at most the rank-side exchange +
-        # the post-aggregate partial-sum exchange survive
-        assert plan.count(") Exchange") <= 2, plan
-        # the checkpoint scan advertises its preserved hash partitioning
-        # and sort order (the `, [src` ordering argument)
-        scan1 = plan.split("(1) Scan ExistingRDD")[1].split("(2)")[0]
-        assert "hashpartitioning(src" in scan1, plan
-        assert "ASC NULLS FIRST" in scan1, plan
-        # the SMJ's edge branch (tree lines prefixed with ':') carries no
-        # Sort and no Exchange — co-location + ordering both preserved
-        tree = plan.split("== Physical Plan ==")[1].split("\n\n")[0]
-        edge_branch_lines = [l for l in tree.splitlines() if l.lstrip().startswith(":")]
-        assert edge_branch_lines, plan
-        assert not any(
-            "Sort" in l or "Exchange" in l for l in edge_branch_lines
-        ), plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_colocate_restores_aqe_and_preserves_values(spark):
-    """colocate is a pure layout change: same rows, and the session's AQE
-    flag is restored even though the checkpoint materializes with it off."""
-    from near_public_lakehouse_spark.operators.bucketing import colocate
-
-    df = spark.range(0, 100).select(
-        (F.col("id") % 7).cast("string").alias("src"), F.col("id").alias("v")
-    )
-    before = spark.conf.get("spark.sql.adaptive.enabled")
-    got = sorted(colocate(df, "src").collect())
-    assert spark.conf.get("spark.sql.adaptive.enabled") == before
-    assert got == sorted(df.collect())
-
-
 def test_bucketed_graph_iteration_is_edge_exchange_free(spark):
     """VERDICT r8 task #4: with the graph edge list pre-bucketed by the
     iteration join key, a PageRank round's physical plan contains EXACTLY

@@ -84,6 +84,27 @@ def test_graph_queries_regime_invariant_under_merge_layout(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_merge_regime_graph_queries_release_cached_layouts(spark):
+    """Under a forced merge regime, BFS and HITS materialize their final
+    state and then drop every `_merge_layout`/`_agg_layout` they cached:
+    once the result is collected the session's CacheManager holds nothing
+    (the lazy rounds used to keep the layouts cached after the query)."""
+    from near_public_lakehouse_spark.queries import all_queries
+
+    qs = all_queries()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.catalog.clearCache()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for n in ["graph_bfs_hops", "link_analysis_hits"]:
+            assert qs[n].fn(spark, SF_DIR).collect(), n
+            assert cache.isEmpty(), n
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        spark.catalog.clearCache()
+
+
 def test_merge_layout_round_plan_has_no_edge_exchange_or_sort(spark):
     """The point of `_merge_layout`: a merge-regime round's SMJ must NOT
     re-exchange or re-sort the cached edge side — the only Exchange on
