@@ -103,10 +103,10 @@ def publish_stream(
     checkpoint_path: str,
     ordered: str = "per_key",
     chunk_size: int = DEFAULT_CHUNK,
-    available_now: bool = True,
     replay_fence: int | None = 1000,
 ):
-    """Streaming publisher: each micro-batch is published then fenced.
+    """Streaming publisher: each micro-batch is published then fenced; the
+    query drains the pending input and stops (availableNow).
 
     Markers under `<state_path>/published/` make a REPLAYED batch a no-op
     (at-least-once overall: only a crash inside the publish->marker gap
@@ -208,12 +208,12 @@ def publish_stream(
                     except (ValueError, OSError):
                         pass
 
-    writer = stream_df.writeStream.foreachBatch(_publish).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        stream_df.writeStream.foreachBatch(_publish)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------

@@ -261,6 +261,55 @@ def _bucket_of(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
+def _touched_buckets(updates: DataFrame, keys: list[str], n_buckets: int) -> list[int]:
+    """The key-hash buckets `updates` touches: a bounded (<= n_buckets)
+    driver-side collect — the same control-plane pattern as merge.py's
+    partition fencing."""
+    rows = updates.select(_bucket_of(keys, n_buckets)).distinct().collect()
+    return sorted(r[0] for r in rows)
+
+
+def _stored_changes(stored: DataFrame, sequence_by: str) -> DataFrame:
+    """Recover the COMPLETE change set from history rows: one change per
+    sequence the run observed (reaffirming no-ops included), not just the
+    run representative — the convergence requirement (see scd2_history).
+    The column set is the STORED schema minus the SCD internals."""
+    internal = {START_COL, END_COL, CURRENT_COL, SEQS_COL, BUCKET_COL}
+    data = [c for c in stored.columns if c not in internal and c != sequence_by]
+    if SEQS_COL not in stored.columns:
+        # Pre-r13 on-disk format: versions carry no sequence-set column.
+        # Each stored version contributes its own start sequence as the
+        # (only) observed change — the r12-era semantics — so old tables
+        # keep applying instead of dying on an unresolved-column
+        # AnalysisException, and the next rewrite migrates them to the
+        # SEQS_COL layout (ADVICE r13).
+        return stored.select(*data, F.col(sequence_by))
+    return stored.select(*data, F.explode(SEQS_COL).alias(sequence_by))
+
+
+def scd2_rebuild(
+    stored: DataFrame | None,
+    updates: DataFrame,
+    keys: list[str],
+    sequence_by: str,
+    n_buckets: int | None = None,
+) -> DataFrame:
+    """The SCD2 apply both stores run (`apply_changes_scd2` on parquet,
+    `versioned.versioned_scd2` on the manifest store): the history of the
+    stored history rows' change set (None before the first write) union
+    `updates`, with a ``__scd_bucket__`` column when `n_buckets` is set.
+    Schema drift in either direction null-fills (`_align_columns`)
+    instead of failing the union (r13 review)."""
+    changes = updates
+    if stored is not None:
+        upd, old = _align_columns(updates, _stored_changes(stored, sequence_by))
+        changes = old.unionByName(upd)
+    hist = scd2_history(changes, keys, sequence_by)
+    if n_buckets:
+        hist = hist.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
+    return hist
+
+
 def apply_changes_scd2(
     spark: SparkSession,
     target_path: str,
@@ -271,10 +320,13 @@ def apply_changes_scd2(
 ) -> None:
     """SCD2 APPLY CHANGES batch core: the DLT ``STORED AS SCD TYPE 2``
     analog. History is rebuilt from (stored rows union new changes) per
-    key, which makes the operator idempotent and out-of-order-convergent
-    by construction — re-applying any batch, in any order, yields the
-    same table (the SCD1 convergence discipline, round-2 crash tests).
-    Crash-atomicity rides the same park-and-swap `_rewrite` as SCD1/MERGE.
+    key by `scd2_rebuild` — the one rebuild `versioned.versioned_scd2`
+    shares — which makes the operator idempotent and
+    out-of-order-convergent by construction: re-applying any batch, in
+    any order, yields the same table (the SCD1 convergence discipline,
+    round-2 crash tests). A new table is written with `write_table`; an
+    existing one is replaced through the same park-and-swap `_rewrite`
+    as SCD1/MERGE, which makes the apply crash-atomic.
 
     ``n_buckets`` is the 100 TB path: the table is laid out partitioned on
     a key-hash bucket, a batch reads ONLY the buckets its keys touch
@@ -282,65 +334,26 @@ def apply_changes_scd2(
     reads ~0.1% of the table), and `_rewrite` swaps only those partitions;
     untouched partition directories are never opened, rewritten, or
     renamed. The bucket count is a layout constant: changing it is a table
-    rewrite, exactly like re-bucketing anywhere else.
-
-    The key->bucket map is deterministic (xxhash64), so the touched-bucket
-    list is a bounded (<= n_buckets) driver-side collect — the same
-    control-plane pattern as merge.py's partition fencing.
+    rewrite, exactly like re-bucketing anywhere else; so is a feed that
+    adds a column. The key->bucket map
+    is deterministic (xxhash64), so the touched-bucket list is a bounded
+    driver-side collect (`_touched_buckets`).
     """
     _recover(target_path)
-    internal = {START_COL, END_COL, CURRENT_COL, SEQS_COL, BUCKET_COL}
-
-    def _stored_changes(stored: DataFrame) -> DataFrame:
-        # Recover the COMPLETE change set from history rows: one change
-        # per sequence the run observed (reaffirming no-ops included),
-        # not just the run representative — the convergence requirement
-        # (see scd2_history). Column set comes from the STORED schema
-        # (minus the SCD internals), then aligns with the updates via
-        # _align_columns — schema drift in either direction null-fills
-        # instead of failing the select (r13 review).
-        data = [
-            c for c in stored.columns if c not in internal and c != sequence_by
-        ]
-        if SEQS_COL not in stored.columns:
-            # Pre-r13 on-disk format: versions carry no sequence-set
-            # column. Each stored version contributes its own start
-            # sequence as the (only) observed change — the r12-era
-            # semantics — so old tables keep applying instead of dying
-            # on an unresolved-column AnalysisException, and the next
-            # rewrite migrates them to the SEQS_COL layout (ADVICE r13).
-            return stored.select(*data, F.col(sequence_by))
-        return stored.select(*data, F.explode(SEQS_COL).alias(sequence_by))
-
+    part = BUCKET_COL if n_buckets else None
     if not table_exists(target_path):
-        hist = scd2_history(updates, keys, sequence_by)
-        if n_buckets:
-            hist = hist.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
-        write_table(hist, target_path, BUCKET_COL if n_buckets else None)
+        hist = scd2_rebuild(None, updates, keys, sequence_by, n_buckets)
+        write_table(hist, target_path, part)
         return
-
-    if not n_buckets:
-        stored = _stored_changes(read_table(spark, target_path))
-        upd, stored = _align_columns(updates, stored)
-        hist = scd2_history(stored.unionByName(upd), keys, sequence_by)
-        _rewrite(spark, hist, target_path, None)
-        return
-
-    touched = [
-        r[0]
-        for r in updates.select(_bucket_of(keys, n_buckets).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    stored = _stored_changes(
-        read_table(spark, target_path)
-        .filter(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
-    )
-    upd, stored = _align_columns(updates, stored)
-    hist = scd2_history(stored.unionByName(upd), keys, sequence_by).withColumn(
-        BUCKET_COL, _bucket_of(keys, n_buckets)
-    )
-    _rewrite(spark, hist, target_path, BUCKET_COL)
+    stored = read_table(spark, target_path)
+    # A feed that widens the schema rewrites every bucket: an untouched
+    # partition would keep files without the new column, and a parquet
+    # read takes its schema from one file, so the column could vanish.
+    if n_buckets and set(updates.columns) <= set(stored.columns):
+        touched = _touched_buckets(updates, keys, n_buckets)
+        stored = stored.filter(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan
+    hist = scd2_rebuild(stored, updates, keys, sequence_by, n_buckets)
+    _rewrite(spark, hist, target_path, part)
 
 
 def scd2_stream(

@@ -22,9 +22,13 @@ Semantics:
   can never observe a half-commit. A crash before publish leaves an
   orphaned data dir that no manifest references: invisible, reclaimed by
   ``vacuum``.
-- **Optimistic concurrency**: two writers racing to version N both prepare
-  data, but only one wins the ``link``; the loser re-reads the log and
-  retries at N+1 (append/upsert re-derive from the new snapshot).
+- **Optimistic concurrency**: every writer is an ``attempt(base)`` closure
+  run by one loop, `_retry`: it derives its commit from the snapshot at
+  ``base = latest_version()`` and publishes version ``base + 1``; a lost
+  ``link`` race (``CommitConflict``) re-reads the log and re-runs the
+  attempt, up to ``_RETRIES`` times. Appends write their data once and
+  only re-point the manifest at the winner's file set; upsert, SCD2,
+  compact and the consumers re-derive against the winner's snapshot.
 - **Snapshot isolation / time travel**: every manifest lists its full file
   set, so ``read_version(spark, dir, n)`` is one log read + one parquet
   scan of exactly those files — no reconstruction replay. Old versions
@@ -43,12 +47,26 @@ Semantics:
   ``skip_change_commits=True`` — never half-read — or surfaced as
   file-granularity delete+insert pairs under ``include_removes=True``
   (the delete direction; ``mirror_into`` is its consumer).
-- **Streaming tail**: ``tail_into``/``tail_until_drained`` consume the
-  change feed into another versioned table with the consumed source
-  version recorded INSIDE the output commit (Delta's txnAppId/txnVersion
-  idempotent-writer contract) — exactly-once incremental propagation with
-  no external checkpoint store, the availableNow streaming-table pattern
-  of `NEAR Public Datasets.py`.
+- **Consumers**: a consumer drains a change feed into a target table with
+  the consumed source version recorded INSIDE the output commit (Delta's
+  txnAppId/txnVersion idempotent-writer contract) — exactly-once
+  incremental propagation with no external checkpoint store, the
+  availableNow streaming-table pattern of `NEAR Public Datasets.py`. Each
+  consumer is a feed plus an apply step:
+
+  * feeds: the manifest store's change feed, or a published Delta table's
+    (`DeltaLogReader`);
+  * apply steps: `_apply_tail_batch` (append, the reference's
+    skipChangeCommits tail) or `_apply_mirror_batch` (net per-key effect,
+    deletes propagated).
+
+  The batch consumers (`tail_into`, `mirror_into`, `delta_mirror_into`)
+  share one drain body, `_drain_batch` (watermark, window, ``drained``
+  marker, data-less watermark commit for an empty window), and the
+  ``*_until_drained`` loops share `_until_drained`. The streaming
+  consumers (`tail_stream`, `mirror_stream`, `delta_mirror_stream`,
+  `delta_tail_stream`) are one query builder, `_start_stream`, around one
+  watermarked foreachBatch sink, `_watermarked_sink`.
 """
 
 from __future__ import annotations
@@ -64,6 +82,8 @@ from pyspark.sql import functions as F
 
 _LOG = "_log"
 _DATA = "data"
+# Lost optimistic races a writer absorbs before giving up.
+_RETRIES = 10
 
 
 class CommitConflict(RuntimeError):
@@ -252,35 +272,49 @@ def last_committed_txn(table_dir: str, app_id: str) -> int | None:
     return None
 
 
-def commit_overwrite(df: DataFrame, table_dir: str, _retries: int = 10) -> int:
+def _retry(table_dir: str, attempt, what: str):
+    """The optimistic-commit loop: ``attempt(latest_version(table_dir))``,
+    re-run on every lost publish race (CommitConflict) up to ``_RETRIES``
+    times. An attempt derives its whole commit from the base it is given,
+    so a retry sees the winner's snapshot."""
+    for _ in range(_RETRIES):
+        try:
+            return attempt(latest_version(table_dir))
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"{what} {table_dir} lost {_RETRIES} races")
+
+
+def _files_at(table_dir: str, base: int | None) -> list[str]:
+    """The file set of version `base` (none before the first commit)."""
+    return _read_manifest(table_dir, base)["files"] if base is not None else []
+
+
+def commit_overwrite(df: DataFrame, table_dir: str) -> int:
     """Replace the table contents in one atomic commit; returns the new
     version. Prior versions remain time-travel readable until vacuumed."""
     files = _write_data(df, table_dir)
     schema = df.schema.json()
-    for _ in range(_retries):
-        try:
-            return _commit(
-                table_dir, "overwrite", files, latest_version(table_dir), schema
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"overwrite of {table_dir} lost {_retries} races")
+    return _retry(
+        table_dir,
+        lambda base: _commit(table_dir, "overwrite", files, base, schema),
+        "overwrite of",
+    )
 
 
-def commit_append(df: DataFrame, table_dir: str, _retries: int = 10) -> int:
+def commit_append(df: DataFrame, table_dir: str) -> int:
     """Append df's rows in one atomic commit. Appends commute, so a lost
     race just re-points the manifest at the new snapshot's file set — the
     already-written data files are reused, never rewritten."""
     new_files = _write_data(df, table_dir)
     schema = df.schema.json()
-    for _ in range(_retries):
-        base = latest_version(table_dir)
-        prior = _read_manifest(table_dir, base)["files"] if base is not None else []
-        try:
-            return _commit(table_dir, "append", prior + new_files, base, schema)
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"append to {table_dir} lost {_retries} races")
+    return _retry(
+        table_dir,
+        lambda base: _commit(
+            table_dir, "append", _files_at(table_dir, base) + new_files, base, schema
+        ),
+        "append to",
+    )
 
 
 def files_for_version(
@@ -353,32 +387,27 @@ def read_version(
     return df
 
 
-def commit_compact(
-    spark: SparkSession, table_dir: str, target_files: int = 1, _retries: int = 10
-) -> int:
+def commit_compact(spark: SparkSession, table_dir: str, target_files: int = 1) -> int:
     """OPTIMIZE analog: rewrite the current snapshot into `target_files`
     files as a new version whose manifest carries ``data_change: false`` —
     readers see identical rows, `read_changes` consumers see NOTHING (the
     Delta OPTIMIZE contract: file reorganization is not data). Old files
     stay until `vacuum`."""
-    for _ in range(_retries):
-        base = latest_version(table_dir)
+
+    def attempt(base):
         if base is None:
             raise FileNotFoundError(f"{table_dir} has no versions to compact")
         snap = read_version(spark, table_dir, base).coalesce(target_files)
-        files = _write_data(snap, table_dir)
-        try:
-            return _commit(
-                table_dir,
-                "compact",
-                files,
-                base,
-                _read_manifest(table_dir, base)["schema"],
-                data_change=False,
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"compact of {table_dir} lost {_retries} races")
+        return _commit(
+            table_dir,
+            "compact",
+            _write_data(snap, table_dir),
+            base,
+            _read_manifest(table_dir, base)["schema"],
+            data_change=False,
+        )
+
+    return _retry(table_dir, attempt, "compact of")
 
 
 def _changes_plan(
@@ -578,6 +607,217 @@ def vacuum(
     return removed
 
 
+# --- consumers: feed + apply step ------------------------------------------
+
+
+def _manifest_feed(
+    spark: SparkSession,
+    source_dir: str,
+    skip_change_commits: bool = False,
+    include_removes: bool = False,
+):
+    """(window, schema_at) over the manifest store's change feed:
+    ``window(since, end)`` is the feed of ``(since, end]``, or None when
+    the window adds no rows (the plan is pure log reads, so an empty
+    window costs no Spark job); ``schema_at(end)`` is the source schema at
+    `end`, the schema a data-less first commit into the target carries."""
+
+    def window(since: int | None, end: int) -> DataFrame | None:
+        plan, _ = _changes_plan(
+            source_dir, since, end, skip_change_commits, include_removes
+        )
+        if not plan:
+            return None
+        return read_changes(
+            spark, source_dir, since_version=since, end_version=end,
+            skip_change_commits=skip_change_commits,
+            include_removes=include_removes,
+        )
+
+    return window, lambda end: _read_manifest(source_dir, end)["schema"]
+
+
+def _delta_feed(spark: SparkSession, reader):
+    """`_manifest_feed`'s twin over a published Delta table, read by the
+    independent protocol reader with removes surfaced. The schema of a
+    data-less first commit comes from the Delta snapshot: schemaString is
+    StructType JSON, the manifest store's native format (a "{}" schema
+    would wedge every later read_version of the target — ADVICE r12)."""
+
+    def window(since: int | None, end: int) -> DataFrame | None:
+        if not reader.change_plan(since, end, include_removes=True):
+            return None
+        return reader.read_changes(
+            spark, since_version=since, end_version=end, include_removes=True
+        )
+
+    return window, lambda end: json.dumps(reader.snapshot(end).schema)
+
+
+def _apply_tail_batch(
+    batch: DataFrame, target_dir: str, base: int | None, app: str, end: int,
+    transform=None,
+) -> dict:
+    """Tail apply step: append `transform(batch)` to the target at `base`
+    in one commit that records ``txn: {app: end}``."""
+    out = transform(batch) if transform is not None else batch
+    new_files = _write_data(out, target_dir)
+    return {
+        "source_version": end,
+        "target_version": _commit(
+            target_dir, "tail", _files_at(target_dir, base) + new_files, base,
+            out.schema.json(), txn={app: end},
+        ),
+        "n_files": len(new_files),
+    }
+
+
+def _apply_mirror_batch(
+    feed: DataFrame, target_dir: str, base: int | None, keys: list[str],
+    app: str, end: int,
+) -> dict:
+    """Mirror apply step: net-reduce the window per key, check the
+    key contract, merge into the target snapshot at `base` and commit with
+    ``txn: {app: end}``."""
+    from pyspark.sql import Window as W
+
+    # Key-contract guard: within one window a key ending LIVE must have
+    # inserts <= deletes + 1; a raw duplicate-key append breaks that and
+    # would be silently collapsed by the net reduce below. One extra pass
+    # over the CHANGED files only (never the target).
+    bal = (
+        feed.groupBy(*keys)
+        .agg(
+            F.sum(
+                F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
+            ).alias("bal")
+        )
+        .filter(F.col("bal") > 1)
+    )
+    offender = bal.limit(1).collect()
+    if offender:
+        raise ValueError(
+            f"source window violates the unique-key contract for keys "
+            f"{keys}: e.g. {tuple(offender[0])[:-1]} has more inserts than "
+            "deletes — mirror_into requires a MERGE-managed source"
+        )
+    rn = F.row_number().over(
+        W.partitionBy(*keys).orderBy(
+            F.desc("_commit_version"), F.desc("_change_type")
+        )
+    )
+    net = feed.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
+    upserts = net.filter(F.col("_change_type") == "insert").drop(
+        "_commit_version", "_change_type"
+    )
+    affected = net.select(*keys)
+    if base is not None:
+        target = read_version(feed.sparkSession, target_dir, base)
+        merged = target.join(affected, keys, "left_anti").unionByName(
+            upserts, allowMissingColumns=True
+        )
+    else:
+        merged = upserts
+    files = _write_data(merged, target_dir)
+    version = _commit(
+        target_dir, "mirror", files, base, merged.schema.json(), txn={app: end}
+    )
+    # row count from the manifest's own parquet-footer stats — no second
+    # execution of the merged plan (r12 review); None if any file lacks it
+    stats = _read_manifest(target_dir, version).get("stats", {})
+    per_file = [s.get("rows") for s in (stats.get(f) for f in files) if s]
+    n_rows = sum(per_file) if len(per_file) == len(files) and all(
+        r is not None for r in per_file
+    ) else None
+    return {
+        "source_version": end,
+        "target_version": version,
+        "n_rows": n_rows,
+    }
+
+
+def _watermark_only_commit(
+    target_dir: str, base: int | None, app: str, end: int, op: str, schema_at
+) -> dict:
+    """Advance a consumer watermark with a data-less commit that reuses
+    the target's current files — an empty window (compaction, skipped
+    change commits) must not rewrite the snapshot (r12 review)."""
+    m = _read_manifest(target_dir, base) if base is not None else None
+    return {
+        "source_version": end,
+        "target_version": _commit(
+            target_dir, op, m["files"] if m else [], base,
+            m["schema"] if m else schema_at(end),
+            data_change=False, txn={app: end},
+        ),
+    }
+
+
+def _drain_batch(
+    target_dir: str,
+    app: str,
+    op: str,
+    count_key: str,
+    tip: int | None,
+    feed,
+    apply,
+    max_versions_per_batch: int | None = None,
+) -> dict:
+    """One batch-consumer micro-batch: the window from this consumer's
+    watermark (``last_committed_txn(app)``) to the source `tip`, capped at
+    `max_versions_per_batch` versions, applied by ``apply(batch, base,
+    end)`` — or, when the `feed` window adds no rows, a data-less commit
+    that only advances the watermark. A window already consumed returns
+    the ``drained`` marker. The whole derivation runs inside the retry
+    attempt: if the racer was another instance of the SAME consumer, the
+    window re-derives as empty and this call no-ops instead of
+    double-applying."""
+    if tip is None:
+        return {
+            "source_version": None,
+            "target_version": latest_version(target_dir),
+            count_key: 0,
+        }
+    window, schema_at = feed
+
+    def attempt(base):
+        since = last_committed_txn(target_dir, app)
+        end = tip
+        if max_versions_per_batch is not None:
+            end = min(tip, (-1 if since is None else since) + max_versions_per_batch)
+        if since is not None and end <= since:
+            # marked so _until_drained stops without a no-op result
+            return {
+                "source_version": since,
+                "target_version": base,
+                count_key: 0,
+                "drained": True,
+            }
+        batch = window(since, end)
+        if batch is None:
+            return {
+                **_watermark_only_commit(target_dir, base, app, end, op, schema_at),
+                count_key: 0,
+            }
+        return apply(batch, base, end)
+
+    return _retry(target_dir, attempt, f"{op} into")
+
+
+def _until_drained(source_dir: str, batch) -> list[dict]:
+    """Run ``batch()`` until the consumer watermark reaches the source tip
+    seen before the batch; returns one result per batch that did work."""
+    results: list[dict] = []
+    while True:
+        src_latest = latest_version(source_dir)
+        r = batch()
+        if r["source_version"] is None or r.get("drained"):
+            return results
+        results.append(r)
+        if src_latest is not None and r["source_version"] >= src_latest:
+            return results
+
+
 def tail_into(
     spark: SparkSession,
     source_dir: str,
@@ -586,7 +826,6 @@ def tail_into(
     app_id: str | None = None,
     skip_change_commits: bool = False,
     max_versions_per_batch: int | None = None,
-    _retries: int = 10,
 ) -> dict:
     """One micro-batch of the versioned-table STREAMING consumer: drain the
     source change feed past this consumer's watermark, apply `transform`,
@@ -608,65 +847,19 @@ def tail_into(
     `transform` must be deterministic for replayed batches to be identical
     (same requirement Structured Streaming puts on foreachBatch sinks).
 
-    A lost optimistic race re-reads the watermark — if the racer was
-    another instance of the SAME consumer, the window re-derives as empty
-    and this call no-ops instead of double-appending.
-
     Returns ``{"source_version", "target_version", "n_files"}`` for the
     batch (all None/0 when there was nothing to do). `max_versions_per_batch`
     bounds one batch's window like `maxFilesPerTrigger`.
     """
     app = app_id or f"tail:{os.path.abspath(source_dir)}"
-    src_latest = latest_version(source_dir)
-    if src_latest is None:
-        return {"source_version": None, "target_version": latest_version(target_dir), "n_files": 0}
-    for _ in range(_retries):
-        base = latest_version(target_dir)
-        since = last_committed_txn(target_dir, app)
-        end = src_latest
-        if max_versions_per_batch is not None:
-            floor = -1 if since is None else since
-            end = min(src_latest, floor + max_versions_per_batch)
-        if since is not None and end <= since:
-            # already drained: marked so tail_until_drained can skip it —
-            # appending a no-op dict broke the "one result per batch that
-            # did work" contract its mirror twin honors (r14 review)
-            return {
-                "source_version": since,
-                "target_version": base,
-                "n_files": 0,
-                "drained": True,
-            }
-        plan, _schema = _changes_plan(source_dir, since, end, skip_change_commits)
-        prior = _read_manifest(target_dir, base)["files"] if base is not None else []
-        if not plan:
-            # Nothing added in the window (compaction / skipped change
-            # commits): advance the watermark with a data-less commit via
-            # the SHARED helper (this branch was an inline copy of
-            # _watermark_only_commit, r14 review).
-            r = _watermark_only_commit(target_dir, base, app, end, "tail", _schema)
-            if r is None:
-                continue  # lost the commit race: re-derive and retry
-            r["n_files"] = r.pop("n_rows")
-            return r
-        batch = read_changes(
-            spark, source_dir, since_version=since, end_version=end,
-            skip_change_commits=skip_change_commits,
-        )
-        out = transform(batch) if transform is not None else batch
-        new_files = _write_data(out, target_dir)
-        try:
-            return {
-                "source_version": end,
-                "target_version": _commit(
-                    target_dir, "tail", prior + new_files, base,
-                    out.schema.json(), txn={app: end},
-                ),
-                "n_files": len(new_files),
-            }
-        except CommitConflict:
-            continue  # racer moved the target; re-derive watermark + window
-    raise CommitConflict(f"tail into {target_dir} lost {_retries} races")
+    return _drain_batch(
+        target_dir, app, "tail", "n_files", latest_version(source_dir),
+        _manifest_feed(spark, source_dir, skip_change_commits),
+        lambda batch, base, end: _apply_tail_batch(
+            batch, target_dir, base, app, end, transform
+        ),
+        max_versions_per_batch,
+    )
 
 
 def mirror_into(
@@ -676,7 +869,6 @@ def mirror_into(
     keys: list[str],
     app_id: str | None = None,
     max_versions_per_batch: int | None = None,
-    _retries: int = 10,
 ) -> dict:
     """Delete-PROPAGATING replication micro-batch: the consumer the
     remove-aware change feed exists for (VERDICT r11 task #7). Where
@@ -710,412 +902,14 @@ def mirror_into(
     undetectable at file granularity and land as last-writer-wins.
     """
     app = app_id or f"mirror:{os.path.abspath(source_dir)}"
-    src_latest = latest_version(source_dir)
-    if src_latest is None:
-        return {"source_version": None, "target_version": latest_version(target_dir), "n_rows": 0}
-    for _ in range(_retries):
-        base = latest_version(target_dir)
-        since = last_committed_txn(target_dir, app)
-        end = src_latest
-        if max_versions_per_batch is not None:
-            floor = -1 if since is None else since
-            end = min(src_latest, floor + max_versions_per_batch)
-        if since is not None and end <= since:
-            return {
-                "source_version": since,
-                "target_version": base,
-                "n_rows": 0,
-                "drained": True,
-            }
-        plan, _schema = _changes_plan(
-            source_dir, since, end, False, include_removes=True
-        )
-        if not plan:
-            # window held only reorganizations: advance the watermark with
-            # a data-less commit (reuse files, data_change=False) instead
-            # of rewriting the whole snapshot for a no-op (r12 review)
-            r = _watermark_only_commit(
-                target_dir, base, app, end, "mirror", _schema
-            )
-            if r is not None:
-                return r
-            continue  # lost the race on the data-less commit
-        feed = read_changes(
-            spark, source_dir, since_version=since, end_version=end,
-            include_removes=True,
-        )
-        r = _apply_mirror_batch(
-            spark, feed, target_dir, base, keys, app, end, "mirror"
-        )
-        if r is not None:
-            return r
-    raise CommitConflict(f"mirror into {target_dir} lost {_retries} races")
-
-
-def _watermark_only_commit(
-    target_dir: str,
-    base: int | None,
-    app: str,
-    end: int,
-    op: str,
-    fallback_schema: str | None,
-) -> dict | None:
-    """Advance a consumer watermark with a data-less commit that reuses
-    the target's current files (tail_into's empty-window branch, shared by
-    the mirrors). None on a lost commit race (caller retries)."""
-    m = _read_manifest(target_dir, base) if base is not None else None
-    prior = m["files"] if m is not None else []
-    prior_schema = m["schema"] if m is not None else fallback_schema or "{}"
-    try:
-        return {
-            "source_version": end,
-            "target_version": _commit(
-                target_dir, op, prior, base, prior_schema,
-                data_change=False, txn={app: end},
-            ),
-            "n_rows": 0,
-        }
-    except CommitConflict:
-        return None
-
-
-def _apply_mirror_batch(
-    spark: SparkSession,
-    feed: DataFrame,
-    target_dir: str,
-    base: int | None,
-    keys: list[str],
-    app: str,
-    end: int,
-    op: str,
-) -> dict | None:
-    """Shared net-reduce + key-contract guard + merge + commit for the
-    mirror consumers (manifest-store and Delta sources). None on a lost
-    commit race (caller retries with a re-derived window)."""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    # Key-contract guard: within one window a key ending LIVE must have
-    # inserts <= deletes + 1; a raw duplicate-key append breaks that and
-    # would be silently collapsed by the net reduce below. One extra pass
-    # over the CHANGED files only (never the target).
-    bal = (
-        feed.groupBy(*keys)
-        .agg(
-            F.sum(
-                F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
-            ).alias("bal")
-        )
-        .filter(F.col("bal") > 1)
+    return _drain_batch(
+        target_dir, app, "mirror", "n_rows", latest_version(source_dir),
+        _manifest_feed(spark, source_dir, include_removes=True),
+        lambda batch, base, end: _apply_mirror_batch(
+            batch, target_dir, base, keys, app, end
+        ),
+        max_versions_per_batch,
     )
-    offender = bal.limit(1).collect()
-    if offender:
-        raise ValueError(
-            f"source window violates the unique-key contract for keys "
-            f"{keys}: e.g. {tuple(offender[0])[:-1]} has more inserts than "
-            "deletes — mirror_into requires a MERGE-managed source"
-        )
-    rn = F.row_number().over(
-        W.partitionBy(*keys).orderBy(
-            F.desc("_commit_version"), F.desc("_change_type")
-        )
-    )
-    net = feed.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
-    upserts = net.filter(F.col("_change_type") == "insert").drop(
-        "_commit_version", "_change_type"
-    )
-    affected = net.select(*keys)
-    if base is not None:
-        target = read_version(spark, target_dir, base)
-        merged = target.join(affected, keys, "left_anti").unionByName(
-            upserts, allowMissingColumns=True
-        )
-    else:
-        merged = upserts
-    files = _write_data(merged, target_dir)
-    try:
-        version = _commit(
-            target_dir, op, files, base, merged.schema.json(), txn={app: end}
-        )
-    except CommitConflict:
-        return None
-    # row count from the manifest's own parquet-footer stats — no second
-    # execution of the merged plan (r12 review); None if any file lacks it
-    stats = _read_manifest(target_dir, version).get("stats", {})
-    per_file = [s.get("rows") for s in (stats.get(f) for f in files) if s]
-    n_rows = sum(per_file) if len(per_file) == len(files) and all(
-        r is not None for r in per_file
-    ) else None
-    return {
-        "source_version": end,
-        "target_version": version,
-        "n_rows": n_rows,
-    }
-
-
-def tail_until_drained(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    transform=None,
-    app_id: str | None = None,
-    skip_change_commits: bool = False,
-    max_versions_per_batch: int | None = None,
-) -> list[dict]:
-    """`trigger(availableNow=True)` analog: run `tail_into` micro-batches
-    until the consumer watermark reaches the source tip; returns one result
-    dict per batch that did work. With `max_versions_per_batch` this
-    replays the source commit history in bounded bites — the knob that
-    keeps executor memory flat when a tail restarts after a long gap."""
-    results: list[dict] = []
-    while True:
-        src_latest = latest_version(source_dir)
-        r = tail_into(
-            spark, source_dir, target_dir, transform=transform, app_id=app_id,
-            skip_change_commits=skip_change_commits,
-            max_versions_per_batch=max_versions_per_batch,
-        )
-        if r["source_version"] is None or r.get("drained"):
-            return results
-        results.append(r)
-        if src_latest is not None and r["source_version"] >= src_latest:
-            return results
-
-
-def mirror_until_drained(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    keys: list[str],
-    app_id: str | None = None,
-    max_versions_per_batch: int | None = None,
-) -> list[dict]:
-    """`tail_until_drained`'s delete-propagating twin: run `mirror_into`
-    micro-batches until the consumer watermark reaches the source tip.
-    With `max_versions_per_batch` a long-gapped restart replays the
-    commit history in bounded bites; each bite applies its window's NET
-    per-key effect, so the target passes through consistent intermediate
-    snapshots (never a half-applied window)."""
-    results: list[dict] = []
-    while True:
-        src_latest = latest_version(source_dir)
-        r = mirror_into(
-            spark, source_dir, target_dir, keys, app_id=app_id,
-            max_versions_per_batch=max_versions_per_batch,
-        )
-        if r["source_version"] is None or r.get("drained"):
-            return results
-        results.append(r)
-        if src_latest is not None and r["source_version"] >= src_latest:
-            return results
-
-
-def tail_stream_batch_sink(target_dir: str, app_id: str, transform=None):
-    """foreachBatch sink appending one change-feed micro-batch —
-    `tail_into`'s apply step with the consumed source version (the
-    batch's max `_commit_version`) as the txn watermark, so foreachBatch
-    at-least-once redelivery no-ops. `transform` must be deterministic
-    (the same contract tail_into and Structured Streaming document)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> dict | None:
-        # One materialization of the executor-side Arrow reads; the
-        # max-agg, the write, and any transform reuse it (r13 review:
-        # uncached foreachBatch input re-read the changed files per job).
-        batch_df.persist()
-        try:
-            top = batch_df.agg(F.max("_commit_version")).collect()[0][0]
-            if top is None:
-                return None  # reorganization-only window: no rows, no commit
-            end = int(top)
-            for _ in range(10):
-                base = latest_version(target_dir)
-                since = last_committed_txn(target_dir, app_id)
-                if since is not None and end <= since:
-                    return None  # recognized replay
-                # A redelivered window may OVERLAP the consumed one (fresh
-                # checkpoint against an advanced watermark): append only
-                # the rows past the watermark, or already-consumed rows
-                # would double-append — unlike the mirror, a tail cannot
-                # converge by rewrite (r13 review).
-                window = (
-                    batch_df.filter(F.col("_commit_version") > since)
-                    if since is not None
-                    else batch_df
-                )
-                out = transform(window) if transform is not None else window
-                prior = (
-                    _read_manifest(target_dir, base)["files"]
-                    if base is not None
-                    else []
-                )
-                new_files = _write_data(out, target_dir)
-                try:
-                    return {
-                        "source_version": end,
-                        "target_version": _commit(
-                            target_dir, "tail", prior + new_files, base,
-                            out.schema.json(), txn={app_id: end},
-                        ),
-                        "n_files": len(new_files),
-                    }
-                except CommitConflict:
-                    continue  # orphaned data dir is invisible + vacuumable
-            raise CommitConflict(f"tail stream into {target_dir} lost 10 races")
-        finally:
-            batch_df.unpersist()
-
-    return write_batch
-
-
-def tail_stream(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    transform=None,
-    app_id: str | None = None,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-):
-    """STREAMING twin of `tail_until_drained` — the reference's exact
-    consumer shape (`NB/BQ Writer Stream.py:9-32`:
-    ``spark.readStream.option("skipChangeCommits", "true")`` + append
-    sink) as a real Structured Streaming query over the
-    `versioned_changes` source: rewrite commits are skipped WHOLESALE,
-    additions append to the target, and the consumed source version
-    rides inside every target commit (txn watermark); a redelivered
-    window that merely OVERLAPS the consumed one appends only the rows
-    past the watermark, so exactly-once holds even across a lost
-    checkpoint. Returns the StreamingQuery (availableNow by default:
-    drain and stop), or None when the source has no versions yet (batch
-    parity with tail_into)."""
-    from near_public_lakehouse_spark.sources.versioned_stream import (
-        VersionedChangesDataSource,
-    )
-
-    if latest_version(source_dir) is None:
-        return None  # batch parity: tail_into no-ops on an unwritten source
-    spark.dataSource.register(VersionedChangesDataSource)
-    app = app_id or f"tail:{os.path.abspath(source_dir)}"
-    feed = (
-        spark.readStream.format("versioned_changes")
-        .option("path", source_dir)
-        .option("includeRemoves", "false")
-        .option("skipChangeCommits", "true")
-        .load()
-    )
-    sink = tail_stream_batch_sink(target_dir, app, transform)
-    writer = feed.writeStream.foreachBatch(sink)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def mirror_stream_batch_sink(target_dir: str, keys: list[str], app_id: str):
-    """foreachBatch sink applying one change-feed micro-batch as a
-    delete-propagating mirror — `mirror_into`'s net-reduce/guard/merge via
-    the shared `_apply_mirror_batch`, with the CONSUMED SOURCE VERSION
-    (the batch's max `_commit_version`) carried inside the target commit
-    as the txn watermark. That makes the sink idempotent under
-    foreachBatch's documented at-least-once replay: a batch redelivered
-    after checkpoint recovery finds `end <= last_committed_txn` and
-    no-ops. Returns the per-batch result dict, or None for empty/replayed
-    batches."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> dict | None:
-        spark = batch_df.sparkSession
-        # One materialization of the executor-side Arrow reads: the
-        # max-agg, the key-contract guard and the net-reduce/merge all
-        # reuse it (r13 review: uncached foreachBatch input re-read the
-        # changed files once per job).
-        batch_df.persist()
-        try:
-            top = batch_df.agg(F.max("_commit_version")).collect()[0][0]
-            if top is None:
-                return None  # reorganization-only window: no rows, no commit
-            end = int(top)
-            for _ in range(10):
-                base = latest_version(target_dir)
-                since = last_committed_txn(target_dir, app_id)
-                if since is not None and end <= since:
-                    return None  # recognized replay (at-least-once delivery)
-                # An OVERLAPPING redelivery (fresh checkpoint against an
-                # advanced watermark) is safe for the mirror — the net
-                # reduce rewrites to the same snapshot — but the guard
-                # below would see the overlap's inserts without their
-                # pre-window deletes, so scope the window to the
-                # watermark for exactness of both.
-                window = (
-                    batch_df.filter(F.col("_commit_version") > since)
-                    if since is not None
-                    else batch_df
-                )
-                r = _apply_mirror_batch(
-                    spark, window, target_dir, base, keys, app_id, end, "mirror"
-                )
-                if r is not None:
-                    return r
-            raise CommitConflict(f"mirror stream into {target_dir} lost 10 races")
-        finally:
-            batch_df.unpersist()
-
-    return write_batch
-
-
-def mirror_stream(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    keys: list[str],
-    app_id: str | None = None,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-):
-    """STREAMING twin of `mirror_until_drained` (VERDICT r12 task #3): a
-    real Structured Streaming query — `readStream` over the
-    `versioned_changes` Python data source (offsets = commit versions,
-    changed files read executor-side as Arrow batches;
-    `sources/versioned_stream.py`) into a `foreachBatch` sink built on the
-    same `_apply_mirror_batch` as the batch mirrors. This is the repo-side
-    shape of the reference's continuous publication consumer
-    (`NB/BQ Writer Stream.py:9-32`), with deletes propagated — the
-    downstream the reference's skipChangeCommits tail cannot have.
-
-    Exactly-once is double-locked: Spark's checkpoint replans identical
-    windows from the immutable log, and the consumed source version rides
-    inside every target commit (txn watermark), so a replayed micro-batch
-    no-ops — crash anywhere between target commit and checkpoint commit
-    and the restart converges. `available_now=True` drains the pending
-    window and stops (the availableNow restart pattern); False leaves a
-    continuous query running — call `.stop()` on the returned handle.
-
-    Returns the StreamingQuery, or None when the source has no versions
-    yet (batch parity with mirror_into). At every micro-batch boundary the
-    target's row set equals the source snapshot at the consumed version —
-    the same invariant as `mirror_into`, pinned against randomized commit
-    histories in tests/test_versioned_stream.py."""
-    from near_public_lakehouse_spark.sources.versioned_stream import (
-        VersionedChangesDataSource,
-    )
-
-    if latest_version(source_dir) is None:
-        return None  # batch parity: mirror_into no-ops on an unwritten source
-    spark.dataSource.register(VersionedChangesDataSource)
-    app = app_id or f"mirror:{os.path.abspath(source_dir)}"
-    feed = (
-        spark.readStream.format("versioned_changes")
-        .option("path", source_dir)
-        .option("includeRemoves", "true")
-        .load()
-    )
-    sink = mirror_stream_batch_sink(target_dir, keys, app)
-    writer = feed.writeStream.foreachBatch(sink)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def delta_mirror_into(
@@ -1124,7 +918,6 @@ def delta_mirror_into(
     target_dir: str,
     keys: list[str],
     app_id: str | None = None,
-    _retries: int = 10,
 ) -> dict:
     """Cross-store consumer: mirror a PUBLISHED Delta table (real
     `_delta_log`, read by the independent protocol reader) into a
@@ -1145,43 +938,242 @@ def delta_mirror_into(
 
     app = app_id or f"delta-mirror:{os.path.abspath(delta_table_dir)}"
     reader = DeltaLogReader(delta_table_dir)
-    tip = reader.versions[-1]
-    for _ in range(_retries):
-        base = latest_version(target_dir)
-        since = last_committed_txn(target_dir, app)
-        if since is not None and tip <= since:
-            return {
-                "source_version": since,
-                "target_version": base,
-                "n_rows": 0,
-                "drained": True,
-            }
-        if not reader.change_plan(since, tip, include_removes=True):
-            # reorganization-only window (e.g. compaction between
-            # publishes): data-less watermark advance, no snapshot rewrite.
-            # On FIRST contact (target has no versions yet) the fallback
-            # schema must come from the Delta snapshot — schemaString is
-            # StructType JSON, the manifest store's native format — or the
-            # v0 commit would carry "{}" and wedge every later read_version
-            # of the target (ADVICE r12).
-            fallback = (
-                json.dumps(reader.snapshot(tip).schema)
-                if base is None
-                else None
-            )
-            r = _watermark_only_commit(target_dir, base, app, tip, "mirror", fallback)
-            if r is not None:
-                return r
-            continue
-        feed = reader.read_changes(
-            spark, since_version=since, end_version=tip, include_removes=True
-        )
-        r = _apply_mirror_batch(
-            spark, feed, target_dir, base, keys, app, tip, "mirror"
-        )
-        if r is not None:
-            return r
-    raise CommitConflict(f"delta mirror into {target_dir} lost {_retries} races")
+    return _drain_batch(
+        target_dir, app, "mirror", "n_rows", reader.versions[-1],
+        _delta_feed(spark, reader),
+        lambda batch, base, end: _apply_mirror_batch(
+            batch, target_dir, base, keys, app, end
+        ),
+    )
+
+
+def tail_until_drained(
+    spark: SparkSession,
+    source_dir: str,
+    target_dir: str,
+    transform=None,
+    app_id: str | None = None,
+    skip_change_commits: bool = False,
+    max_versions_per_batch: int | None = None,
+) -> list[dict]:
+    """`trigger(availableNow=True)` analog: run `tail_into` micro-batches
+    until the consumer watermark reaches the source tip; returns one result
+    dict per batch that did work. With `max_versions_per_batch` this
+    replays the source commit history in bounded bites — the knob that
+    keeps executor memory flat when a tail restarts after a long gap."""
+    return _until_drained(
+        source_dir,
+        lambda: tail_into(
+            spark, source_dir, target_dir, transform=transform, app_id=app_id,
+            skip_change_commits=skip_change_commits,
+            max_versions_per_batch=max_versions_per_batch,
+        ),
+    )
+
+
+def mirror_until_drained(
+    spark: SparkSession,
+    source_dir: str,
+    target_dir: str,
+    keys: list[str],
+    app_id: str | None = None,
+    max_versions_per_batch: int | None = None,
+) -> list[dict]:
+    """`tail_until_drained`'s delete-propagating twin: run `mirror_into`
+    micro-batches until the consumer watermark reaches the source tip.
+    With `max_versions_per_batch` a long-gapped restart replays the
+    commit history in bounded bites; each bite applies its window's NET
+    per-key effect, so the target passes through consistent intermediate
+    snapshots (never a half-applied window)."""
+    return _until_drained(
+        source_dir,
+        lambda: mirror_into(
+            spark, source_dir, target_dir, keys, app_id=app_id,
+            max_versions_per_batch=max_versions_per_batch,
+        ),
+    )
+
+
+# --- streaming consumers ------------------------------------------------------
+
+# readStream options of the two feed shapes, shared by the manifest-store
+# (`versioned_changes`) and Delta (`delta_changes`) sources
+_TAIL_FEED = {"includeRemoves": "false", "skipChangeCommits": "true"}
+_MIRROR_FEED = {"includeRemoves": "true"}
+
+
+def _watermarked_sink(target_dir: str, app_id: str, apply):
+    """foreachBatch sink applying one change-feed micro-batch with
+    ``apply(window, base, end)``, where `end` — the CONSUMED SOURCE
+    VERSION, the batch's max `_commit_version` — rides inside the target
+    commit as the txn watermark. That makes the sink idempotent under
+    foreachBatch's documented at-least-once replay: a batch redelivered
+    after checkpoint recovery finds `end <= last_committed_txn` and
+    no-ops. Returns the apply step's result, or None for empty/replayed
+    batches."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> dict | None:
+        # One materialization of the executor-side Arrow reads; the
+        # max-agg and every job of the apply step reuse it (r13 review:
+        # uncached foreachBatch input re-read the changed files per job).
+        batch_df.persist()
+        try:
+            top = batch_df.agg(F.max("_commit_version")).collect()[0][0]
+            if top is None:
+                return None  # reorganization-only window: no rows, no commit
+            end = int(top)
+
+            def attempt(base):
+                since = last_committed_txn(target_dir, app_id)
+                if since is not None and end <= since:
+                    return None  # recognized replay (at-least-once delivery)
+                # A redelivered window may OVERLAP the consumed one (fresh
+                # checkpoint against an advanced watermark): apply only the
+                # rows past the watermark. A tail would otherwise
+                # double-append already-consumed rows (it cannot converge by
+                # rewrite), and the mirror's key guard would see the
+                # overlap's inserts without their pre-window deletes.
+                window = (
+                    batch_df.filter(F.col("_commit_version") > since)
+                    if since is not None
+                    else batch_df
+                )
+                return apply(window, base, end)
+
+            return _retry(target_dir, attempt, "stream into")
+        finally:
+            batch_df.unpersist()
+
+    return write_batch
+
+
+def tail_stream_batch_sink(target_dir: str, app_id: str, transform=None):
+    """foreachBatch sink appending one change-feed micro-batch —
+    `tail_into`'s apply step (`_apply_tail_batch`) in `_watermarked_sink`,
+    so foreachBatch at-least-once redelivery no-ops. `transform` must be
+    deterministic (the same contract tail_into and Structured Streaming
+    document)."""
+    return _watermarked_sink(
+        target_dir, app_id,
+        lambda window, base, end: _apply_tail_batch(
+            window, target_dir, base, app_id, end, transform
+        ),
+    )
+
+
+def mirror_stream_batch_sink(target_dir: str, keys: list[str], app_id: str):
+    """foreachBatch sink applying one change-feed micro-batch as a
+    delete-propagating mirror — `mirror_into`'s net-reduce/guard/merge
+    (`_apply_mirror_batch`) in `_watermarked_sink`, so a batch redelivered
+    after checkpoint recovery no-ops. Returns the per-batch result dict,
+    or None for empty/replayed batches."""
+    return _watermarked_sink(
+        target_dir, app_id,
+        lambda window, base, end: _apply_mirror_batch(
+            window, target_dir, base, keys, app_id, end
+        ),
+    )
+
+
+def _start_stream(
+    spark: SparkSession,
+    source,
+    path: str,
+    options: dict[str, str],
+    sink,
+    checkpoint_dir: str | None,
+):
+    """Register the Python data source class `source`, read its change
+    feed at `path` with `options`, and start a foreachBatch(`sink`) query
+    that drains the pending window and stops (availableNow — the
+    reference's restart pattern). Returns the StreamingQuery."""
+    spark.dataSource.register(source)
+    feed = (
+        spark.readStream.format(source.name())
+        .option("path", path)
+        .options(**options)
+        .load()
+    )
+    writer = feed.writeStream.foreachBatch(sink)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.trigger(availableNow=True).start()
+
+
+def tail_stream(
+    spark: SparkSession,
+    source_dir: str,
+    target_dir: str,
+    transform=None,
+    app_id: str | None = None,
+    checkpoint_dir: str | None = None,
+):
+    """STREAMING twin of `tail_until_drained` — the reference's exact
+    consumer shape (`NB/BQ Writer Stream.py:9-32`:
+    ``spark.readStream.option("skipChangeCommits", "true")`` + append
+    sink) as a real Structured Streaming query over the
+    `versioned_changes` source: rewrite commits are skipped WHOLESALE,
+    additions append to the target, and the consumed source version
+    rides inside every target commit (txn watermark); a redelivered
+    window that merely OVERLAPS the consumed one appends only the rows
+    past the watermark, so exactly-once holds even across a lost
+    checkpoint. Returns the StreamingQuery (availableNow: drain and
+    stop), or None when the source has no versions yet (batch parity
+    with tail_into)."""
+    from near_public_lakehouse_spark.sources.versioned_stream import (
+        VersionedChangesDataSource,
+    )
+
+    if latest_version(source_dir) is None:
+        return None  # batch parity: tail_into no-ops on an unwritten source
+    app = app_id or f"tail:{os.path.abspath(source_dir)}"
+    return _start_stream(
+        spark, VersionedChangesDataSource, source_dir, _TAIL_FEED,
+        tail_stream_batch_sink(target_dir, app, transform), checkpoint_dir,
+    )
+
+
+def mirror_stream(
+    spark: SparkSession,
+    source_dir: str,
+    target_dir: str,
+    keys: list[str],
+    app_id: str | None = None,
+    checkpoint_dir: str | None = None,
+):
+    """STREAMING twin of `mirror_until_drained` (VERDICT r12 task #3): a
+    real Structured Streaming query — `readStream` over the
+    `versioned_changes` Python data source (offsets = commit versions,
+    changed files read executor-side as Arrow batches;
+    `sources/versioned_stream.py`) into a `foreachBatch` sink built on the
+    same `_apply_mirror_batch` as the batch mirrors. This is the repo-side
+    shape of the reference's continuous publication consumer
+    (`NB/BQ Writer Stream.py:9-32`), with deletes propagated — the
+    downstream the reference's skipChangeCommits tail cannot have.
+
+    Exactly-once is double-locked: Spark's checkpoint replans identical
+    windows from the immutable log, and the consumed source version rides
+    inside every target commit (txn watermark), so a replayed micro-batch
+    no-ops — crash anywhere between target commit and checkpoint commit
+    and the restart converges. The query drains the pending window and
+    stops (the availableNow restart pattern).
+
+    Returns the StreamingQuery, or None when the source has no versions
+    yet (batch parity with mirror_into). At every micro-batch boundary the
+    target's row set equals the source snapshot at the consumed version —
+    the same invariant as `mirror_into`, pinned against randomized commit
+    histories in tests/test_versioned_stream.py."""
+    from near_public_lakehouse_spark.sources.versioned_stream import (
+        VersionedChangesDataSource,
+    )
+
+    if latest_version(source_dir) is None:
+        return None  # batch parity: mirror_into no-ops on an unwritten source
+    app = app_id or f"mirror:{os.path.abspath(source_dir)}"
+    return _start_stream(
+        spark, VersionedChangesDataSource, source_dir, _MIRROR_FEED,
+        mirror_stream_batch_sink(target_dir, keys, app), checkpoint_dir,
+    )
 
 
 def delta_mirror_stream(
@@ -1191,7 +1183,6 @@ def delta_mirror_stream(
     keys: list[str],
     app_id: str | None = None,
     checkpoint_dir: str | None = None,
-    available_now: bool = True,
 ):
     """STREAMING twin of `delta_mirror_into` (VERDICT r14 task #4): a real
     Structured Streaming query — `readStream` over the `delta_changes`
@@ -1207,7 +1198,7 @@ def delta_mirror_stream(
     checkpoint replans identical windows from the immutable _delta_log,
     and the consumed DELTA version rides inside every target commit (txn
     watermark), so a replayed or overlapping micro-batch no-ops /
-    re-scopes. `available_now=True` drains the pending window and stops.
+    re-scopes. The query drains the pending window and stops.
     Returns the StreamingQuery. Same contract as the batch drain: the
     window's JSON commits must exist and removed files must be inside
     the publish-side vacuum retention window."""
@@ -1215,21 +1206,11 @@ def delta_mirror_stream(
         DeltaChangesDataSource,
     )
 
-    spark.dataSource.register(DeltaChangesDataSource)
     app = app_id or f"delta-mirror:{os.path.abspath(delta_table_dir)}"
-    feed = (
-        spark.readStream.format("delta_changes")
-        .option("path", delta_table_dir)
-        .option("includeRemoves", "true")
-        .load()
+    return _start_stream(
+        spark, DeltaChangesDataSource, delta_table_dir, _MIRROR_FEED,
+        mirror_stream_batch_sink(target_dir, keys, app), checkpoint_dir,
     )
-    sink = mirror_stream_batch_sink(target_dir, keys, app)
-    writer = feed.writeStream.foreachBatch(sink)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def delta_tail_stream(
@@ -1239,7 +1220,6 @@ def delta_tail_stream(
     transform=None,
     app_id: str | None = None,
     checkpoint_dir: str | None = None,
-    available_now: bool = True,
 ):
     """The reference's EXACT consumer shape over a published Delta table
     (`NB/BQ Writer Stream.py:9-15`: ``spark.readStream.option(
@@ -1252,22 +1232,11 @@ def delta_tail_stream(
         DeltaChangesDataSource,
     )
 
-    spark.dataSource.register(DeltaChangesDataSource)
     app = app_id or f"delta-tail:{os.path.abspath(delta_table_dir)}"
-    feed = (
-        spark.readStream.format("delta_changes")
-        .option("path", delta_table_dir)
-        .option("includeRemoves", "false")
-        .option("skipChangeCommits", "true")
-        .load()
+    return _start_stream(
+        spark, DeltaChangesDataSource, delta_table_dir, _TAIL_FEED,
+        tail_stream_batch_sink(target_dir, app, transform), checkpoint_dir,
     )
-    sink = tail_stream_batch_sink(target_dir, app, transform)
-    writer = feed.writeStream.foreachBatch(sink)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def idempotent_batch_sink(table_dir: str, app_id: str, transform=None):
@@ -1282,7 +1251,7 @@ def idempotent_batch_sink(table_dir: str, app_id: str, transform=None):
     Returns True when the batch committed, False when it was a recognized
     replay. Structured Streaming runs one instance of a query at a time, so
     the txn check races only with a crashed predecessor's leftover commit —
-    which the optimistic-conflict loop re-checks."""
+    which every retry attempt re-checks."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> bool:
         last = last_committed_txn(table_dir, app_id)
@@ -1290,22 +1259,23 @@ def idempotent_batch_sink(table_dir: str, app_id: str, transform=None):
             return False
         out = transform(batch_df) if transform is not None else batch_df
         files = _write_data(out, table_dir)
-        for _ in range(10):
+        schema = out.schema.json()
+
+        def attempt(base):
             if (cur := last_committed_txn(table_dir, app_id)) is not None and batch_id <= cur:
                 return False  # lost a race to a replay of ourselves
-            base = latest_version(table_dir)
-            prior = _read_manifest(table_dir, base)["files"] if base is not None else []
-            try:
-                _commit(
-                    table_dir, "streaming-append", prior + files, base,
-                    out.schema.json(), txn={app_id: batch_id},
-                )
-                return True
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"streaming append to {table_dir} lost 10 races")
+            _commit(
+                table_dir, "streaming-append", _files_at(table_dir, base) + files,
+                base, schema, txn={app_id: batch_id},
+            )
+            return True
+
+        return _retry(table_dir, attempt, "streaming append to")
 
     return write_batch
+
+
+# --- keyed writes --------------------------------------------------------------
 
 
 def versioned_upsert(
@@ -1315,7 +1285,6 @@ def versioned_upsert(
     keys: list[str],
     when_matched_update: bool = True,
     ignore_null_updates: bool = False,
-    _retries: int = 10,
 ) -> int:
     """MERGE `source` into the versioned table (same matched/insert-only/
     IGNORE-NULL semantics as operators.merge.merge_upsert, M1) as one
@@ -1324,33 +1293,18 @@ def versioned_upsert(
     away, which is exactly Delta's conflict-retry behavior."""
     from near_public_lakehouse_spark.operators.merge import merged_frame
 
-    for _ in range(_retries):
-        base = latest_version(table_dir)
-        if base is None:
-            try:
-                return _commit(
-                    table_dir,
-                    "upsert",
-                    _write_data(source, table_dir),
-                    None,
-                    source.schema.json(),
-                )
-            except CommitConflict:
-                continue
-        target = read_version(spark, table_dir, base)
-        merged = merged_frame(
-            target,
+    def attempt(base):
+        merged = source if base is None else merged_frame(
+            read_version(spark, table_dir, base),
             source,
             keys,
             when_matched_update=when_matched_update,
             ignore_null_updates=ignore_null_updates,
         )
         files = _write_data(merged, table_dir)
-        try:
-            return _commit(table_dir, "upsert", files, base, merged.schema.json())
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"upsert into {table_dir} lost {_retries} races")
+        return _commit(table_dir, "upsert", files, base, merged.schema.json())
+
+    return _retry(table_dir, attempt, "upsert into")
 
 
 def versioned_scd2(
@@ -1360,14 +1314,15 @@ def versioned_scd2(
     keys: list[str],
     sequence_by: str,
     n_buckets: int | None = None,
-    _retries: int = 10,
 ) -> int:
     """SCD Type-2 APPLY CHANGES as one atomic commit on the versioned
     table: dimension history WITH time travel — ``read_version(dir, n)``
     answers "what did this dimension's history (and its __scd_current__
     rows) look like at version n", and the change feed shows each apply as
-    one commit. History semantics are operators.scd.scd2_history's
-    (rebuild-from-union: idempotent, out-of-order convergent); atomicity,
+    one commit. The history is `operators.scd.scd2_rebuild` — the same
+    rebuild `apply_changes_scd2` runs on the parquet store (stored
+    changes, reaffirmed sequences included, union the new ones: idempotent,
+    out-of-order convergent, drifted columns null-filled); atomicity,
     optimistic concurrency and lost-race re-derivation follow
     versioned_upsert's discipline — SCD2 applies don't commute either, so
     a lost race recomputes against the winner's snapshot.
@@ -1384,34 +1339,15 @@ def versioned_scd2(
     correctness filter."""
     from near_public_lakehouse_spark.operators.scd import (
         BUCKET_COL,
-        _bucket_of,
-        scd2_history,
+        _touched_buckets,
+        scd2_rebuild,
     )
 
-    data_cols = [c for c in changes.columns]
-    for _ in range(_retries):
-        base = latest_version(table_dir)
-        if base is None:
-            hist = scd2_history(changes, keys, sequence_by)
-            if n_buckets:
-                hist = hist.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
-                hist = hist.repartition(n_buckets, BUCKET_COL)
-            try:
-                return _commit(
-                    table_dir,
-                    "scd2",
-                    _write_data(hist, table_dir),
-                    None,
-                    hist.schema.json(),
-                    meta={"scd2_n_buckets": int(n_buckets or 0)},
-                )
-            except CommitConflict:
-                continue
-        m = _read_manifest(table_dir, base)
-        stored_has_buckets = any(
-            f.get("name") == BUCKET_COL
-            for f in json.loads(m["schema"]).get("fields", [])
-        )
+    def attempt(base):
+        m = _read_manifest(table_dir, base) if base is not None else {}
+        stored_cols = {
+            f["name"] for f in json.loads(m.get("schema", "{}")).get("fields", [])
+        }
         # The bucket count is a LAYOUT constant: pruning with a different
         # modulus than the stored rows were bucketed under silently
         # corrupts the history (a touched key's old rows can land in
@@ -1421,15 +1357,17 @@ def versioned_scd2(
         # table with buckets but no recorded count — takes the full
         # rewrite below, which re-buckets under the requested count and
         # records it (the documented migration path, correct at any
-        # count, just not incremental).
+        # count, just not incremental). A feed that adds a column takes
+        # it too: carried files would lack the column, and a parquet read
+        # of mixed files takes its schema from one of them.
         recorded_buckets = m.get("meta", {}).get("scd2_n_buckets")
-        if n_buckets and stored_has_buckets and recorded_buckets == n_buckets:
-            touched = sorted(
-                r[0]
-                for r in changes.select(_bucket_of(keys, n_buckets).alias("b"))
-                .distinct()
-                .collect()
-            )
+        if (
+            n_buckets
+            and BUCKET_COL in stored_cols
+            and recorded_buckets == n_buckets
+            and set(changes.columns) <= stored_cols
+        ):
+            touched = _touched_buckets(changes, keys, n_buckets)
             stats = m.get("stats", {})
             keep, candidates = [], []
             for f in m["files"]:
@@ -1444,37 +1382,29 @@ def versioned_scd2(
                 )
             else:
                 cand = read_version(spark, table_dir, base).limit(0)
-            untouched = cand.filter(~F.col(BUCKET_COL).isin(touched))
-            touched_rows = cand.filter(F.col(BUCKET_COL).isin(touched)).select(
-                *data_cols
+            in_touched = F.col(BUCKET_COL).isin(touched)
+            hist = scd2_rebuild(
+                cand.filter(in_touched), changes, keys, sequence_by, n_buckets
             )
-            hist = scd2_history(
-                touched_rows.unionByName(changes), keys, sequence_by
-            ).withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
-            out = untouched.unionByName(hist).repartition(
-                max(1, min(len(touched) + 1, n_buckets)), BUCKET_COL
+            out = (
+                cand.filter(~in_touched)
+                .unionByName(hist, allowMissingColumns=True)
+                .repartition(max(1, min(len(touched) + 1, n_buckets)), BUCKET_COL)
             )
             files = keep + _write_data(out, table_dir)
-            try:
-                return _commit(
-                    table_dir, "scd2", files, base, out.schema.json(),
-                    meta={"scd2_n_buckets": int(n_buckets)},
-                )
-            except CommitConflict:
-                continue
-        stored = read_version(spark, table_dir, base).select(*data_cols)
-        hist = scd2_history(stored.unionByName(changes), keys, sequence_by)
-        if n_buckets:
-            # migration: un-bucketed table + n_buckets => one full rewrite
-            # into the bucketed layout; subsequent applies prune.
-            hist = hist.withColumn(BUCKET_COL, _bucket_of(keys, n_buckets))
-            hist = hist.repartition(n_buckets, BUCKET_COL)
-        files = _write_data(hist, table_dir)
-        try:
-            return _commit(
-                table_dir, "scd2", files, base, hist.schema.json(),
-                meta={"scd2_n_buckets": int(n_buckets or 0)},
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"scd2 apply into {table_dir} lost {_retries} races")
+        else:
+            # first write, unbucketed apply, widened feed, or the
+            # migration of a table bucketed differently (or not at all)
+            # into the requested layout: one full rewrite; subsequent
+            # applies prune.
+            stored = read_version(spark, table_dir, base) if base is not None else None
+            out = scd2_rebuild(stored, changes, keys, sequence_by, n_buckets)
+            if n_buckets:
+                out = out.repartition(n_buckets, BUCKET_COL)
+            files = _write_data(out, table_dir)
+        return _commit(
+            table_dir, "scd2", files, base, out.schema.json(),
+            meta={"scd2_n_buckets": int(n_buckets or 0)},
+        )
+
+    return _retry(table_dir, attempt, "scd2 apply into")

@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from near_public_lakehouse_spark.operators.merge import _recover, _rewrite
+
 ROCKSDB_CONF = {
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -1851,6 +1853,10 @@ def streaming_public_table(
 
 
 # --- streaming twin of the flagship 5-way actions denorm (VERDICT r9 #5) ---
+# The folds' pending/state dirs are replaced with the MERGE core's
+# crash-safe swap: `merge._rewrite` materializes the new dir, parks the old
+# one at ``.__old__`` and installs the new one; `merge._recover`
+# re-installs a parked copy that a crash left as the only one.
 
 ACTIONS_FACT = "silver_action_receipt_actions"
 ACTIONS_DIMS = (
@@ -1861,16 +1867,6 @@ ACTIONS_DIMS = (
     "silver_blocks",
 )
 _ACTIONS_KEYS = ("block_date", "receipt_id", "index_in_action_receipt")
-
-
-def _recover_pending(pending: str) -> None:
-    """Re-install a pending dir parked by a crashed swap (same discipline
-    as operators/merge._recover: the parked copy is the only copy)."""
-    import os
-
-    old = pending + ".__drop__"
-    if os.path.isdir(old) and not os.path.isdir(pending):
-        os.rename(old, pending)
 
 
 def _fold_actions_batch(
@@ -1904,7 +1900,7 @@ def _fold_actions_batch(
         publish_public_table,
     )
 
-    _recover_pending(pending)
+    _recover(pending)
     if os.path.isdir(pending):
         facts = facts.unionByName(spark.read.parquet(pending))
     # replays / pending overlap: the natural key is unique per action row
@@ -1942,7 +1938,7 @@ def _fold_actions_batch(
     unmatched = facts.join(
         result.select(*_ACTIONS_KEYS), list(_ACTIONS_KEYS), "left_anti"
     ).join(dropped, list(_ACTIONS_KEYS), "left_anti")
-    _swap_dir(pending, unmatched)
+    _rewrite(spark, unmatched, pending, None)
 
 
 def streaming_public_actions(
@@ -1999,7 +1995,7 @@ def flush_pending_actions(
     import os
 
     pending = os.path.join(checkpoint, "pending_facts")
-    _recover_pending(pending)
+    _recover(pending)
     if not os.path.isdir(pending):
         return 0
     empty = spark.read.parquet(silver_paths[ACTIONS_FACT]).limit(0)
@@ -2015,25 +2011,6 @@ def flush_pending_actions(
 # block dimension arrives; account balances fold daily-LATEST state and
 # publish at epoch close (the reference schedules both daily — NB NEAR
 # Public Datasets.py:319-386).
-
-
-def _swap_dir(path: str, df: DataFrame) -> None:
-    """Crash-safe replace of a state/pending dir (the same rename
-    discipline as the actions twin's parking swap: a crash leaves either
-    the old dir, the old dir parked at .__drop__, or the new dir —
-    `_recover_pending` re-installs the parked copy)."""
-    import os
-    import shutil
-
-    new = path + ".__new__"
-    shutil.rmtree(new, ignore_errors=True)
-    df.write.mode("overwrite").parquet(new)
-    old = path + ".__drop__"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(new, path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def _fold_supply_batch(
@@ -2058,7 +2035,7 @@ def _fold_supply_batch(
         publish_public_table,
     )
 
-    _recover_pending(pending)
+    _recover(pending)
     if os.path.isdir(pending):
         rows = rows.unionByName(spark.read.parquet(pending))
     rows = rows.dropDuplicates(["block_date", "block_height"]).localCheckpoint()
@@ -2070,7 +2047,7 @@ def _fold_supply_batch(
         "block_height",
         "left_anti",
     )
-    _swap_dir(pending, unmatched)
+    _rewrite(spark, unmatched, pending, None)
 
 
 def streaming_public_supply(
@@ -2121,7 +2098,7 @@ def flush_pending_supply(
     import os
 
     pending = os.path.join(checkpoint, "pending_supply")
-    _recover_pending(pending)
+    _recover(pending)
     if not os.path.isdir(pending):
         return 0
     empty = spark.read.parquet(gold_supply_path).limit(0)
@@ -2153,8 +2130,8 @@ def _fold_balances_batch(
 
     from near_public_lakehouse_spark.operators.scd import latest_by
 
-    _recover_pending(state)
-    _recover_pending(pending)
+    _recover(state)
+    _recover(pending)
     if os.path.isdir(pending):
         changes = changes.unionByName(spark.read.parquet(pending))
     changes = changes.localCheckpoint()
@@ -2165,8 +2142,8 @@ def _fold_balances_batch(
     if os.path.isdir(state):
         fresh = fresh.unionByName(spark.read.parquet(state))
     folded = latest_by(fresh, ["affected_account_id"], "block_height")
-    _swap_dir(state, folded)
-    _swap_dir(pending, beyond)
+    _rewrite(spark, folded, state, None)
+    _rewrite(spark, beyond, pending, None)
 
 
 def flush_pending_balances(
@@ -2179,7 +2156,7 @@ def flush_pending_balances(
     import os
 
     pending = os.path.join(checkpoint, "pending_balances")
-    _recover_pending(pending)
+    _recover(pending)
     if not os.path.isdir(pending):
         return 0
     empty = spark.read.parquet(changes_path).limit(0)
@@ -2256,7 +2233,7 @@ def publish_balances_epoch(
     )
 
     state = os.path.join(checkpoint, "balances_state")
-    _recover_pending(state)
+    _recover(state)
     ac = spark.read.parquet(state)
     amb = spark.read.parquet(amb_path)
     rewards = spark.read.parquet(rewards_path)
@@ -2282,7 +2259,7 @@ def expire_pending(
     discipline as the folds."""
     import os
 
-    _recover_pending(pending)
+    _recover(pending)
     if not os.path.isdir(pending):
         return 0
     cur = spark.read.parquet(pending)
@@ -2291,7 +2268,7 @@ def expire_pending(
     )
     dropped = cur.count() - keep.count()
     if dropped:
-        _swap_dir(pending, keep)
+        _rewrite(spark, keep, pending, None)
     return dropped
 
 

@@ -291,14 +291,34 @@ def test_merge_null_partition_value_preserved(spark, target):
 # --- SCD Type 2 ------------------------------------------------------------
 
 
-def _hist(spark, path):
+def _hist(spark, path, read=None):
     from near_public_lakehouse_spark.operators.scd import CURRENT_COL, END_COL, START_COL
 
+    df = spark.read.parquet(path) if read is None else read(path)
     return sorted(
-        ((r.k, r.v, r[START_COL], r[END_COL], r[CURRENT_COL])
-         for r in spark.read.parquet(path).collect()),
+        ((r.k, r.v, r[START_COL], r[END_COL], r[CURRENT_COL]) for r in df.collect()),
         key=lambda t: (t[0], t[2]),
     )
+
+
+def _scd2_store(spark, store):
+    """(apply, read) of one SCD2 store: the parquet table
+    (`apply_changes_scd2`) or the versioned manifest store
+    (`versioned_scd2`). Both run the one shared rebuild."""
+    from near_public_lakehouse_spark.operators import versioned as V
+    from near_public_lakehouse_spark.operators.scd import apply_changes_scd2
+
+    if store == "parquet":
+        return apply_changes_scd2, spark.read.parquet
+    return V.versioned_scd2, lambda path: V.read_version(spark, path)
+
+
+# Every SCD2 store and layout: the late-change and drift tests run on each.
+scd2_stores = pytest.mark.parametrize(
+    "store,n_buckets",
+    [("parquet", None), ("parquet", 4), ("versioned", None), ("versioned", 4)],
+    ids=["parquet-flat", "parquet-bucketed", "versioned-flat", "versioned-bucketed"],
+)
 
 
 def test_scd2_builds_history(spark, target):
@@ -535,37 +555,99 @@ def test_merge_unpartitioned_crash_after_install_no_duplicates(spark, target, mo
     assert _os.path.isdir(_os.path.join(target, "_delta_log"))
 
 
-def test_scd2_late_change_splits_reaffirmed_run(spark, target, tmp_path):
+@scd2_stores
+def test_scd2_late_change_splits_reaffirmed_run(spark, tmp_path, store, n_buckets):
     """THE r13 review scenario: {A@1 x, A@3 x} applied first (the seq-3
     reaffirmation is a no-op and opens no version), then a LATE {A@2 y}.
     Convergence demands the rebuilt history equal the all-at-once order:
     x [1,2), y [2,3), x [3,null) with current=x — the r12 form lost the
-    reaffirmation and landed on current=y."""
-    from near_public_lakehouse_spark.operators.scd import apply_changes_scd2
-
+    reaffirmation and landed on current=y. Both stores, flat and
+    bucketed: the versioned store's private rebuild used to drop the
+    retained sequences and land on current=y."""
+    apply, read = _scd2_store(spark, store)
     schema = "k int, v string, seq int"
     one = str(tmp_path / "one")
-    apply_changes_scd2(
+    target = str(tmp_path / "tbl")
+    apply(
         spark,
         one,
         spark.createDataFrame([(1, "x", 1), (1, "y", 2), (1, "x", 3)], schema),
         ["k"],
         "seq",
+        n_buckets=n_buckets,
     )
-    apply_changes_scd2(
+    apply(
         spark, target, spark.createDataFrame([(1, "x", 1), (1, "x", 3)], schema),
-        ["k"], "seq",
+        ["k"], "seq", n_buckets=n_buckets,
     )
     # before the late row: one collapsed version, reaffirmation retained
-    assert _hist(spark, target) == [(1, "x", 1, None, True)]
-    apply_changes_scd2(
-        spark, target, spark.createDataFrame([(1, "y", 2)], schema), ["k"], "seq"
+    assert _hist(spark, target, read) == [(1, "x", 1, None, True)]
+    apply(
+        spark, target, spark.createDataFrame([(1, "y", 2)], schema), ["k"], "seq",
+        n_buckets=n_buckets,
     )
-    assert _hist(spark, target) == _hist(spark, one) == [
+    assert _hist(spark, target, read) == _hist(spark, one, read) == [
         (1, "x", 1, 2, False),
         (1, "y", 2, 3, False),
         (1, "x", 3, None, True),
     ]
+
+
+@scd2_stores
+def test_scd2_widened_feed_null_fills(spark, tmp_path, store, n_buckets):
+    """A change feed with one more column than the stored history (a
+    widened stream after a restart) null-fills the stored versions
+    instead of failing the rebuild; keys the batch does not touch keep
+    their history. The versioned store used to raise UNRESOLVED_COLUMN,
+    and a bucketed apply rewrites every bucket rather than leave files
+    without the column."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from near_public_lakehouse_spark.operators import versioned as V
+    from near_public_lakehouse_spark.operators.scd import CURRENT_COL, END_COL, START_COL
+
+    apply, read = _scd2_store(spark, store)
+    target = str(tmp_path / "tbl")
+    apply(
+        spark,
+        target,
+        spark.createDataFrame(
+            [(1, "x", 1), (2, "a", 1), (3, "c", 1)], "k int, v string, seq int"
+        ),
+        ["k"],
+        "seq",
+        n_buckets=n_buckets,
+    )
+    apply(
+        spark,
+        target,
+        spark.createDataFrame([(1, "y", 2, "new")], "k int, v string, seq int, w string"),
+        ["k"],
+        "seq",
+        n_buckets=n_buckets,
+    )
+    rows = sorted(
+        (r.k, r.v, r.w, r[START_COL], r[END_COL], r[CURRENT_COL])
+        for r in read(target).collect()
+    )
+    assert rows == [
+        (1, "x", None, 1, 2, False),
+        (1, "y", "new", 2, None, True),
+        (2, "a", None, 1, None, True),
+        (3, "c", None, 1, None, True),
+    ]
+    # Every live file carries the new column: a parquet read of mixed
+    # files takes its schema from one of them, so a bucketed apply that
+    # rewrote only the touched bucket could lose the column on read.
+    live = (
+        [os.path.join(target, f) for f in V.files_for_version(target)]
+        if store == "versioned"
+        else glob.glob(os.path.join(target, "**", "*.parquet"), recursive=True)
+    )
+    assert live and all("w" in pq.read_schema(f).names for f in live)
 
 
 def test_scd1_null_stored_sequence_is_updatable(spark, target):
