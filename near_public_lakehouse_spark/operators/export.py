@@ -158,7 +158,6 @@ def avro_stream_sink(
     reexport_trailing: int = 0,
     fmt: str = "avro",
     now_fn=None,
-    available_now: bool = True,
 ):
     """Streaming variant of the hourly publication path: a `writeStream`
     sink that drains a stream into a staging store and publishes every
@@ -205,6 +204,11 @@ def avro_stream_sink(
     from pyspark.sql import functions as F
 
     from near_public_lakehouse_spark.functions.time import NS_PER_HOUR, _floordiv
+    from near_public_lakehouse_spark.streaming.jobs import (
+        _read_batches,
+        _start_batches,
+        _write_batch,
+    )
 
     _require_local_path(base_path, "avro_stream_sink (its hour markers)")
     # staging also uses driver-local open/listdir/rmtree (_BATCH_HI,
@@ -213,8 +217,7 @@ def avro_stream_sink(
 
     def _publish(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bdir = f"{staging_path}/batch_id={batch_id}"
-        batch_df.write.mode("overwrite").parquet(bdir)
+        bdir = _write_batch(batch_df, staging_path, batch_id)
         # batch-local max(ts): reads back just this trigger's files
         bhi = spark.read.parquet(bdir).agg(F.max(ts_col).alias("hi")).collect()[0].hi
         if bhi is not None:
@@ -251,9 +254,7 @@ def avro_stream_sink(
             # floor-divide the ns BIGINT driver-side (float division would
             # round near hour boundaries — the repo-wide ns discipline)
             now = datetime.utcfromtimestamp(hi // 1_000_000_000)
-        staged = spark.read.option("basePath", staging_path).parquet(
-            f"{staging_path}/batch_id=*"
-        ).drop("batch_id")
+        staged = _read_batches(spark, staging_path).drop("batch_id")
         export_closed_hours(
             staged,
             base_path,
@@ -298,12 +299,7 @@ def avro_stream_sink(
             if dir_hi // NS_PER_HOUR < safe_hour:
                 shutil.rmtree(d)
 
-    writer = stream_df.writeStream.foreachBatch(_publish).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(stream_df, _publish, checkpoint_path)
 
 
 def export_closed_hours(

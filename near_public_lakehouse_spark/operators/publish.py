@@ -127,6 +127,7 @@ def publish_stream(
     deepest checkpoint rollback you will ever restore.
     """
     from near_public_lakehouse_spark.operators.export import _require_local_path
+    from near_public_lakehouse_spark.streaming.jobs import _start_batches
 
     # markers and _CURSOR use driver-local os/open — an object-store URI
     # would silently become a literal local dir and lose the replay fence
@@ -208,12 +209,7 @@ def publish_stream(
                     except (ValueError, OSError):
                         pass
 
-    return (
-        stream_df.writeStream.foreachBatch(_publish)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream_df, _publish, checkpoint_path)
 
 
 # ---------------------------------------------------------------------------

@@ -157,9 +157,10 @@ def apply_changes_stream(
     ignore_null_updates: bool = False,
     n_buckets: int | None = None,
 ):
-    """Streaming APPLY CHANGES: foreachBatch(apply_changes) with
-    availableNow semantics left to the caller's trigger choice.
-    Forward ``n_buckets`` for large dimensions (see apply_changes)."""
+    """Streaming APPLY CHANGES: foreachBatch(apply_changes) over what has
+    landed, then stop. Forward ``n_buckets`` for large dimensions (see
+    apply_changes)."""
+    from near_public_lakehouse_spark.streaming.jobs import _start_batches
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_changes(
@@ -172,12 +173,7 @@ def apply_changes_stream(
             n_buckets=n_buckets,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 # --- SCD Type 2 ------------------------------------------------------------
@@ -371,6 +367,7 @@ def scd2_stream(
     `apply_changes_scd2`, rewriting the entire table per batch — the exact
     hazard the key-hash bucketed layout exists to avoid at scale.
     """
+    from near_public_lakehouse_spark.streaming.jobs import _start_batches
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         apply_changes_scd2(
@@ -382,9 +379,4 @@ def scd2_stream(
             n_buckets=n_buckets,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)

@@ -97,9 +97,10 @@ def shard_manifest_from_stream(spark: SparkSession, base: str) -> DataFrame:
     """The folded manifest over everything the streaming shard appender
     has written: per shard, total docs and id fences — the same row shape
     as the batch `_manifest`."""
+    from near_public_lakehouse_spark.streaming.jobs import _read_batches
+
     return (
-        spark.read.option("basePath", f"{base}/_manifest_parts")
-        .parquet(f"{base}/_manifest_parts/batch_id=*")
+        _read_batches(spark, f"{base}/_manifest_parts")
         .groupBy("shard_id")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -128,13 +129,13 @@ def streaming_training_shards(
     partitioned-layout form. Manifest partials fold losslessly (a doc
     lives in exactly one batch); `shard_manifest_from_stream` equals the
     batch `_manifest` over the same corpus."""
-    from near_public_lakehouse_spark.streaming.jobs import _stream_path
+    from near_public_lakehouse_spark.streaming.jobs import (
+        _file_stream,
+        _start_batches,
+        _write_batch,
+    )
 
-    schema = spark.read.parquet(docs_path).schema
-    r = spark.readStream
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = r.schema(schema).parquet(_stream_path(docs_path))
+    stream = _file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         sharded = batch_df.withColumn("shard_id", shard_col(seed, n_shards))
@@ -147,20 +148,14 @@ def streaming_training_shards(
             .partitionBy("shard_id", "batch_id")
             .parquet(f"{base}/data")
         )
-        (
-            sharded.groupBy("shard_id")
-            .agg(
+        _write_batch(
+            sharded.groupBy("shard_id").agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.min("doc_id").alias("min_doc_id"),
                 F.max("doc_id").alias("max_doc_id"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{base}/_manifest_parts/batch_id={batch_id}")
+            ),
+            f"{base}/_manifest_parts",
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)

@@ -340,6 +340,21 @@ def _files_from_manifest(m: dict, predicate: list[tuple] | None) -> list[str]:
     return files
 
 
+def _read_files(
+    spark: SparkSession, table_dir: str, files: list[str], schema_json: str
+) -> DataFrame:
+    """Read `files` of `table_dir` under a manifest's recorded schema. A
+    plain parquet read takes its schema from one file, so a column that a
+    later commit added vanishes whenever an older file is listed first;
+    under the recorded schema the older files null-fill it."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromJson(json.loads(schema_json))
+    if not files:
+        return spark.createDataFrame([], schema=schema)
+    return spark.read.schema(schema).parquet(*(os.path.join(table_dir, f) for f in files))
+
+
 def read_version(
     spark: SparkSession,
     table_dir: str,
@@ -366,12 +381,7 @@ def read_version(
     # one manifest read serves the vacuum check AND the pruning (the
     # files_for_version call here used to re-stat + re-parse it, r14)
     files = _files_from_manifest(m, predicate)
-    from pyspark.sql.types import StructType
-
-    if not files:
-        df = spark.createDataFrame([], schema=StructType.fromJson(json.loads(m["schema"])))
-    else:
-        df = spark.read.parquet(*(os.path.join(table_dir, f) for f in files))
+    df = _read_files(spark, table_dir, files, m["schema"])
     if predicate:
         from pyspark.sql import functions as F
 
@@ -1358,8 +1368,7 @@ def versioned_scd2(
         # rewrite below, which re-buckets under the requested count and
         # records it (the documented migration path, correct at any
         # count, just not incremental). A feed that adds a column takes
-        # it too: carried files would lack the column, and a parquet read
-        # of mixed files takes its schema from one of them.
+        # it too, so no carried file lacks a column of the new history.
         recorded_buckets = m.get("meta", {}).get("scd2_n_buckets")
         if (
             n_buckets
@@ -1376,12 +1385,7 @@ def versioned_scd2(
                     _file_matches(st, [(BUCKET_COL, "=", b)]) for b in touched
                 )
                 (candidates if hits else keep).append(f)
-            if candidates:
-                cand = spark.read.parquet(
-                    *(os.path.join(table_dir, f) for f in candidates)
-                )
-            else:
-                cand = read_version(spark, table_dir, base).limit(0)
+            cand = _read_files(spark, table_dir, candidates, m["schema"])
             in_touched = F.col(BUCKET_COL).isin(touched)
             hist = scd2_rebuild(
                 cand.filter(in_touched), changes, keys, sequence_by, n_buckets

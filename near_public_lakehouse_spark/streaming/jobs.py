@@ -21,6 +21,7 @@ the JVM heap; checkpoints make every query restartable.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -54,12 +55,45 @@ def _file_stream(spark, path: str, max_files_per_trigger: int | None = None):
     return r.schema(schema).parquet(_stream_path(path))
 
 
+def _start_batches(stream: DataFrame, fn, checkpoint: str):
+    """The trigger policy of every streaming job and streaming operator:
+    run `fn(batch_df, batch_id)` over each micro-batch of what has landed
+    in `stream`, checkpointed at `checkpoint`, then stop. Returns the
+    StreamingQuery."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _write_batch(df: DataFrame, root: str, batch_id: int) -> str:
+    """Write micro-batch `batch_id`'s partial state under `root`; returns
+    its dir. This is the per-batch state format of the folds: one parquet
+    dir per batch, `<root>/batch_id=N`, overwritten on replay, so a batch
+    that Spark re-runs after a crash replaces its own partial instead of
+    counting twice. `compact_substring_index` folds committed dirs into
+    `batch_id=-1`, which `_read_batches` reads like any other."""
+    path = f"{root}/batch_id={batch_id}"
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def _read_batches(spark: SparkSession, root: str, merge_schema: bool = False) -> DataFrame:
+    """Every batch partial under `root` (a compacted `batch_id=-1`
+    included) as one frame with the inferred `batch_id` column.
+    `merge_schema` reads dirs written before a column was added."""
+    r = spark.read.option("basePath", root)
+    if merge_schema:
+        r = r.option("mergeSchema", "true")
+    return r.parquet(f"{root}/batch_id=*")
+
+
 def _stream_path(path: str) -> str:
     """FileStreamSource treats a concrete file path as its basePath and
     rejects it ("must be a directory"). A single-file GLOB anchors
     basePath to the parent dir instead."""
-    import os
-
     if os.path.isfile(path):
         d, base = os.path.split(path)
         return os.path.join(d, f"[{base[0]}]{base[1:]}")
@@ -206,7 +240,6 @@ def sessionizer_state_version(checkpoint_dir: str) -> int | None:
     compatibility checker writes — the same artifact that makes a
     mismatched resume fail, so detection and enforcement cannot drift."""
     import glob
-    import os
 
     for path in sorted(
         glob.glob(os.path.join(checkpoint_dir, "state", "0", "*", "_metadata", "schema"))
@@ -623,12 +656,7 @@ def streaming_decontamination(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         decontaminate(batch_df, bench).write.mode("append").parquet(out_path)
 
-    return (
-        corpus.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(corpus, _batch, checkpoint)
 
 
 def streaming_incremental_dedup(
@@ -660,12 +688,7 @@ def streaming_incremental_dedup(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         incremental_dedup_frames(batch_df, corpus).write.mode("append").parquet(out_path)
 
-    return (
-        incoming.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(incoming, _batch, checkpoint)
 
 
 def streaming_frequent_ngrams(
@@ -791,16 +814,15 @@ def streaming_boilerplate_decontamination(
             "doc_id", F.explode("grams").alias("ngram")
         ).localCheckpoint()  # feeds the index write AND the flag join
         cand = mg_candidates(occ.select("ngram"), capacity).distinct()
-        (
+        _write_batch(
             occ.join(F.broadcast(cand), "ngram")
             .groupBy("ngram")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/batch_id={batch_id}")
+            .agg(F.count(F.lit(1)).alias("n_docs")),
+            index_path,
+            batch_id,
         )
         block = (
-            sp.read.option("basePath", index_path)
-            .parquet(f"{index_path}/batch_id=*")
+            _read_batches(sp, index_path)
             .groupBy("ngram")
             .agg(F.sum("n_docs").alias("n_total"))
             .filter(F.col("n_total") >= support)
@@ -811,7 +833,7 @@ def streaming_boilerplate_decontamination(
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_blocked"))
         )
-        (
+        _write_batch(
             docs.select("doc_id", F.size("grams").alias("n_ngrams"))
             .join(hits, "doc_id", "left")
             .select(
@@ -819,17 +841,12 @@ def streaming_boilerplate_decontamination(
                 "n_ngrams",
                 F.coalesce("n_blocked", F.lit(0)).alias("n_blocked"),
                 (F.coalesce("n_blocked", F.lit(0)) > 0).alias("is_flagged"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{out_path}/batch_id={batch_id}")
+            ),
+            out_path,
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def streaming_substring_clean(
@@ -872,15 +889,13 @@ def streaming_substring_clean(
         sp = batch_df.sparkSession
         t, e = doc_windows(batch_df)
         e = e.localCheckpoint()  # feeds the index write AND the starts join
-        (
-            e.groupBy("h")
-            .agg(F.countDistinct("doc_id").alias("n_docs"))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/batch_id={batch_id}")
+        _write_batch(
+            e.groupBy("h").agg(F.countDistinct("doc_id").alias("n_docs")),
+            index_path,
+            batch_id,
         )
         merged = (
-            sp.read.option("basePath", index_path)
-            .parquet(f"{index_path}/batch_id=*")
+            _read_batches(sp, index_path)
             .groupBy("h")
             .agg(F.sum("n_docs").alias("n_docs"))
         )
@@ -888,16 +903,9 @@ def streaming_substring_clean(
         starts = (
             e.join(dup_h, "h").groupBy("doc_id").agg(F.collect_set("i").alias("starts"))
         )
-        clean_against_starts(t, starts).write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
+        _write_batch(clean_against_starts(t, starts), out_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def compact_substring_index(
@@ -947,7 +955,6 @@ def compact_substring_index(
     streaming_substring_clean's docstring)."""
     import glob as _glob
     import json
-    import os
     import shutil
 
     target = os.path.join(index_path, "batch_id=-1")
@@ -1038,8 +1045,7 @@ def adaptive_thresholds_from_state(spark: SparkSession, index_path: str) -> Data
 
     def _mass(sub: str, key: str, out: str) -> DataFrame:
         return (
-            spark.read.option("basePath", f"{index_path}/{sub}")
-            .parquet(f"{index_path}/{sub}/batch_id=*")
+            _read_batches(spark, f"{index_path}/{sub}")
             .groupBy("source", key)
             .agg(F.sum("n").alias("n"))
             .groupBy("source")
@@ -1090,19 +1096,18 @@ def streaming_adaptive_thresholds(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         keys = _s2_keys_df(batch_df).localCheckpoint()
-        (
-            keys.groupBy("source", "band_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/band/batch_id={batch_id}")
+        _write_batch(
+            keys.groupBy("source", "band_key").agg(F.count(F.lit(1)).alias("n")),
+            f"{index_path}/band",
+            batch_id,
         )
-        (
+        _write_batch(
             keys.filter(F.col("band_key").startswith("s2:0:"))
             .select("source", sig_key_col().alias("sig_key"))
             .groupBy("source", "sig_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/sig/batch_id={batch_id}")
+            .agg(F.count(F.lit(1)).alias("n")),
+            f"{index_path}/sig",
+            batch_id,
         )
         (
             adaptive_thresholds_from_state(sp, index_path)
@@ -1111,12 +1116,7 @@ def streaming_adaptive_thresholds(
             .parquet(f"{index_path}/thresholds")
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def data_card_from_state(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1129,8 +1129,7 @@ def data_card_from_state(spark: SparkSession, index_path: str) -> DataFrame:
     differs from the batch avg by float noise only (pinned <= 1e-9 in
     tests/test_streaming_card.py)."""
     fp = (
-        spark.read.option("basePath", f"{index_path}/fp")
-        .parquet(f"{index_path}/fp/batch_id=*")
+        _read_batches(spark, f"{index_path}/fp")
         .groupBy("source", "fingerprint")
         .agg(F.sum("n").alias("n"))
         .groupBy("source")
@@ -1143,9 +1142,7 @@ def data_card_from_state(spark: SparkSession, index_path: str) -> DataFrame:
         )
     )
     sums = (
-        spark.read.option("basePath", f"{index_path}/sums")
-        .option("mergeSchema", "true")
-        .parquet(f"{index_path}/sums/batch_id=*")
+        _read_batches(spark, f"{index_path}/sums", merge_schema=True)
         .groupBy("source")
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -1207,24 +1204,22 @@ def streaming_source_data_card(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
         rows = card_row_metrics(batch_df).localCheckpoint()
-        (
-            rows.groupBy("source", "fingerprint")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/fp/batch_id={batch_id}")
+        _write_batch(
+            rows.groupBy("source", "fingerprint").agg(F.count(F.lit(1)).alias("n")),
+            f"{index_path}/fp",
+            batch_id,
         )
-        (
-            rows.groupBy("source")
-            .agg(
+        _write_batch(
+            rows.groupBy("source").agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum("n_ws").alias("total_tokens"),
                 F.sum("n_bpe").alias("total_bpe_tokens"),
                 F.sum("qfail").alias("n_quality_fail"),
                 F.sum("q").alias("sum_q"),
                 F.count("q").alias("n_q"),  # avg(q) denominator parity
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/sums/batch_id={batch_id}")
+            ),
+            f"{index_path}/sums",
+            batch_id,
         )
         (
             data_card_from_state(sp, index_path)
@@ -1233,20 +1228,13 @@ def streaming_source_data_card(
             .parquet(f"{index_path}/card")
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def mixture_kept_from_state(spark: SparkSession, index_path: str) -> DataFrame:
     """Every keep decision the streaming mixture sampler has made so far
     (doc_id, avg_logprob, band, as_of_batch)."""
-    return spark.read.option("basePath", f"{index_path}/kept").parquet(
-        f"{index_path}/kept/batch_id=*"
-    )
+    return _read_batches(spark, f"{index_path}/kept")
 
 
 def streaming_quality_mixture(
@@ -1297,52 +1285,37 @@ def streaming_quality_mixture(
         tok = batch_df.select(
             "doc_id", F.explode(tokens_col()).alias("token")
         ).localCheckpoint()
-        (
-            tok.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/freq/batch_id={batch_id}")
+        _write_batch(
+            tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt")),
+            f"{index_path}/freq",
+            batch_id,
         )
         freq = (
-            sp.read.option("basePath", f"{index_path}/freq")
-            .parquet(f"{index_path}/freq/batch_id=*")
+            _read_batches(sp, f"{index_path}/freq")
             .groupBy("token")
             .agg(F.sum("cnt").alias("cnt"))
         )
         doc = unigram_scores_against(tok, freq).localCheckpoint()
-        (
+        _write_batch(
             doc.agg(
                 F.sum("avg_logprob").alias("sum_logprob"),
                 F.count(F.lit(1)).alias("n_docs"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/scores/batch_id={batch_id}")
+            ),
+            f"{index_path}/scores",
+            batch_id,
         )
-        mu = (
-            sp.read.option("basePath", f"{index_path}/scores")
-            .parquet(f"{index_path}/scores/batch_id=*")
-            .agg((F.sum("sum_logprob") / F.sum("n_docs")).alias("mu"))
+        mu = _read_batches(sp, f"{index_path}/scores").agg(
+            (F.sum("sum_logprob") / F.sum("n_docs")).alias("mu")
         )
-        (
-            mixture_keep(doc, mu)
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/kept/batch_id={batch_id}")
-        )
+        _write_batch(mixture_keep(doc, mu), f"{index_path}/kept", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def dsir_scores_from_state(spark: SparkSession, index_path: str) -> DataFrame:
     """Every importance score the streaming DSIR job has assigned so far
     (doc_id, n_feats, log_importance, avg_log_importance, as_of_batch)."""
-    return spark.read.option("basePath", f"{index_path}/scores").parquet(
-        f"{index_path}/scores/batch_id=*"
-    )
+    return _read_batches(spark, f"{index_path}/scores")
 
 
 def streaming_dsir_importance(
@@ -1391,51 +1364,40 @@ def streaming_dsir_importance(
         sp = batch_df.sparkSession
         bg = dsir_feature_stream(batch_df).localCheckpoint()
         is_tgt = F.col("lang") == DSIR_TARGET_LANG
-        (
-            bg.groupBy("b")
-            .agg(
+        _write_batch(
+            bg.groupBy("b").agg(
                 F.count(F.lit(1)).alias("rc"),
                 F.sum(is_tgt.cast("long")).alias("tc"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/buckets/batch_id={batch_id}")
+            ),
+            f"{index_path}/buckets",
+            batch_id,
         )
-        (
+        _write_batch(
             bg.agg(
                 F.count(F.lit(1)).alias("n_raw"),
                 F.sum(is_tgt.cast("long")).alias("n_tgt"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/totals/batch_id={batch_id}")
+            ),
+            f"{index_path}/totals",
+            batch_id,
         )
         folded = (
-            sp.read.option("basePath", f"{index_path}/buckets")
-            .parquet(f"{index_path}/buckets/batch_id=*")
+            _read_batches(sp, f"{index_path}/buckets")
             .groupBy("b")
             .agg(F.sum("rc").alias("rc"), F.sum("tc").alias("tc"))
         )
         raw = folded.select("b", "rc")
         tgt = folded.filter(F.col("tc") > 0).select("b", "tc")
-        tots = (
-            sp.read.option("basePath", f"{index_path}/totals")
-            .parquet(f"{index_path}/totals/batch_id=*")
-            .agg(
-                F.sum("n_raw").cast("double").alias("n_raw"),
-                F.sum("n_tgt").cast("double").alias("n_tgt"),
-            )
+        tots = _read_batches(sp, f"{index_path}/totals").agg(
+            F.sum("n_raw").cast("double").alias("n_raw"),
+            F.sum("n_tgt").cast("double").alias("n_tgt"),
         )
-        (
-            dsir_doc_scores(bg, dsir_log_ratios(raw, tgt, tots))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/scores/batch_id={batch_id}")
+        _write_batch(
+            dsir_doc_scores(bg, dsir_log_ratios(raw, tgt, tots)),
+            f"{index_path}/scores",
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def cdc_families_from_state(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1443,8 +1405,7 @@ def cdc_families_from_state(spark: SparkSession, index_path: str) -> DataFrame:
     has seen: fold the per-batch chunk index and report chunk hashes with
     >= 2 occurrences — the same shape as the batch `cdc_chunk_dedup`."""
     folded = (
-        spark.read.option("basePath", f"{index_path}/chunks")
-        .parquet(f"{index_path}/chunks/batch_id=*")
+        _read_batches(spark, f"{index_path}/chunks")
         .groupBy("chunk_hash")
         .agg(
             F.min("chunk_len").cast("bigint").alias("chunk_len"),
@@ -1487,7 +1448,7 @@ def streaming_cdc_chunks(
     stream = _file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        _write_batch(
             cdc_chunk_instances(batch_df)
             .groupBy("chunk_hash")
             .agg(
@@ -1495,17 +1456,12 @@ def streaming_cdc_chunks(
                 F.count(F.lit(1)).alias("n_occurrences"),
                 F.countDistinct("doc_id").alias("n_docs"),
                 F.min("doc_id").alias("example_doc_id"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/chunks/batch_id={batch_id}")
+            ),
+            f"{index_path}/chunks",
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def packing_from_state(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1528,8 +1484,7 @@ def packing_from_state(spark: SparkSession, index_path: str) -> DataFrame:
     )
 
     spans = (
-        spark.read.option("basePath", f"{index_path}/spans")
-        .parquet(f"{index_path}/spans/batch_id=*")
+        _read_batches(spark, f"{index_path}/spans")
         # batch_id is inferred from the directory name; pin it to bigint
         # HERE so the exclusive cumsum below orders numerically even when
         # partitionColumnTypeInference is disabled (string '10' < '2'
@@ -1602,20 +1557,15 @@ def streaming_sequence_packing(
         lens = batch_df.select(
             "doc_id", F.size(tokens_col()).cast("bigint").alias("n_tok")
         )
-        (
+        _write_batch(
             distributed_exclusive_cumsum(lens, ["doc_id"], "n_tok", out="start")
             .filter(F.col("n_tok") > 0)
-            .select("doc_id", "start", "n_tok")
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/spans/batch_id={batch_id}")
+            .select("doc_id", "start", "n_tok"),
+            f"{index_path}/spans",
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def winnowing_matches_from_state(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1623,8 +1573,7 @@ def winnowing_matches_from_state(spark: SparkSession, index_path: str) -> DataFr
     winnowing indexer has seen — same shape as the batch
     `winnowing_matches`."""
     folded = (
-        spark.read.option("basePath", f"{index_path}/fps")
-        .parquet(f"{index_path}/fps/batch_id=*")
+        _read_batches(spark, f"{index_path}/fps")
         .groupBy("fingerprint")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -1659,23 +1608,18 @@ def streaming_winnowing(
         fp = winnowing_selections(batch_df).select(
             "doc_id", F.expr("key DIV 65536").alias("fingerprint")
         )
-        (
+        _write_batch(
             fp.distinct()
             .groupBy("fingerprint")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.min("doc_id").alias("example_doc_id"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/fps/batch_id={batch_id}")
+            ),
+            f"{index_path}/fps",
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def weighted_sample_from_state(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1685,9 +1629,7 @@ def weighted_sample_from_state(spark: SparkSession, index_path: str) -> DataFram
     per-batch top-Ks (bottom-k sketches merge exactly)."""
     from near_public_lakehouse_spark.queries.sampling import WES_K
 
-    parts = spark.read.option("basePath", f"{index_path}/winners").parquet(
-        f"{index_path}/winners/batch_id=*"
-    )
+    parts = _read_batches(spark, f"{index_path}/winners")
     w = Window.partitionBy("source").orderBy(F.desc("es_key"), "doc_id")
     return (
         parts.select("doc_id", "source", "weight", "es_key")
@@ -1719,16 +1661,11 @@ def streaming_weighted_sample(
     stream = _file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        weighted_sample_frame(batch_df).drop("rnk").write.mode("overwrite").parquet(
-            f"{index_path}/winners/batch_id={batch_id}"
+        _write_batch(
+            weighted_sample_frame(batch_df).drop("rnk"), f"{index_path}/winners", batch_id
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def streaming_retrieval_index(
@@ -1764,25 +1701,17 @@ def streaming_retrieval_index(
     stream = _file_stream(spark, docs_path, max_files_per_trigger)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        _postings(batch_df).write.mode("overwrite").parquet(
-            f"{index_path}/postings/batch_id={batch_id}"
-        )
-        (
-            batch_df.select(F.size(tokens_col()).alias("dl"))
-            .agg(
+        _write_batch(_postings(batch_df), f"{index_path}/postings", batch_id)
+        _write_batch(
+            batch_df.select(F.size(tokens_col()).alias("dl")).agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum("dl").cast("bigint").alias("sum_dl"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/docstats/batch_id={batch_id}")
+            ),
+            f"{index_path}/docstats",
+            batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 def bm25_topk_from_state(spark: SparkSession, index_path: str, k: int | None = None) -> DataFrame:
@@ -1798,14 +1727,8 @@ def bm25_topk_from_state(spark: SparkSession, index_path: str, k: int | None = N
     - scoring expressions are literally the same Column objects."""
     from near_public_lakehouse_spark.queries import retrieval as R
 
-    tf = (
-        spark.read.option("basePath", f"{index_path}/postings")
-        .parquet(f"{index_path}/postings/batch_id=*")
-        .drop("batch_id")
-    )
-    ds = spark.read.option("basePath", f"{index_path}/docstats").parquet(
-        f"{index_path}/docstats/batch_id=*"
-    )
+    tf = _read_batches(spark, f"{index_path}/postings").drop("batch_id")
+    ds = _read_batches(spark, f"{index_path}/docstats")
     stats = ds.agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         (F.sum("sum_dl").cast("double") / F.sum("n_docs")).alias("avgdl"),
@@ -1844,19 +1767,43 @@ def streaming_public_table(
     def _batch(batch_df: DataFrame, _batch_id: int) -> None:
         publish_public_table(spark, table, build(batch_df, processed_time), out_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, checkpoint)
 
 
 # --- streaming twin of the flagship 5-way actions denorm (VERDICT r9 #5) ---
-# The folds' pending/state dirs are replaced with the MERGE core's
-# crash-safe swap: `merge._rewrite` materializes the new dir, parks the old
-# one at ``.__old__`` and installs the new one; `merge._recover`
-# re-installs a parked copy that a crash left as the only one.
+# The actions, supply and balances twins park the rows they cannot apply
+# yet (a dimension or the epoch fence has not arrived) in a pending dir and
+# re-offer them with every batch. Pending/state dirs are replaced with the
+# MERGE core's crash-safe swap: `merge._rewrite` materializes the new dir,
+# parks the old one at ``.__old__`` and installs the new one;
+# `merge._recover` re-installs a parked copy that a crash left as the only
+# one.
+
+
+def _unpark(
+    spark: SparkSession, rows: DataFrame, pending: str, keys: Sequence[str] = ()
+) -> DataFrame:
+    """`rows` plus the rows parked at `pending` by earlier batches
+    (de-duplicated on `keys` when given: a replay can re-offer a parked
+    row), materialized so the batch may then rewrite `pending`."""
+    _recover(pending)
+    if os.path.isdir(pending):
+        rows = rows.unionByName(spark.read.parquet(pending))
+    if keys:
+        rows = rows.dropDuplicates(list(keys))
+    return rows.localCheckpoint()
+
+
+def _flush_parked(spark: SparkSession, pending: str, source_path: str, fold) -> int:
+    """The drain step of the parked-rows twins: re-offer what is parked at
+    `pending` by running `fold` on an empty batch of `source_path`, with
+    no new stream input. Returns the number of rows still parked."""
+    _recover(pending)
+    if not os.path.isdir(pending):
+        return 0
+    fold(spark.read.parquet(source_path).limit(0))
+    return spark.read.parquet(pending).count() if os.path.isdir(pending) else 0
+
 
 ACTIONS_FACT = "silver_action_receipt_actions"
 ACTIONS_DIMS = (
@@ -1893,19 +1840,13 @@ def _fold_actions_batch(
     dimension lag, and replays are safe because a crashed batch replays
     against the pre-batch pending dir and the MERGE is idempotent.)
     """
-    import os
-
     from near_public_lakehouse_spark.plans.public import (
         public_actions,
         publish_public_table,
     )
 
-    _recover(pending)
-    if os.path.isdir(pending):
-        facts = facts.unionByName(spark.read.parquet(pending))
     # replays / pending overlap: the natural key is unique per action row
-    facts = facts.dropDuplicates(list(_ACTIONS_KEYS)).localCheckpoint()
-
+    facts = _unpark(spark, facts, pending, _ACTIONS_KEYS)
     dims = {n: spark.read.parquet(silver_paths[n]) for n in ACTIONS_DIMS}
     result = public_actions(
         facts,
@@ -1958,10 +1899,7 @@ def streaming_public_actions(
     once every fact's dimensions have arrived — pinned against
     out-of-order arrival in tests/test_public_datasets.py. After a drain,
     `flush_pending_actions` retries parked facts without new input."""
-    import os
-
-    fact_path = silver_paths[ACTIONS_FACT]
-    stream = _file_stream(spark, fact_path, max_files_per_trigger)
+    stream = _file_stream(spark, silver_paths[ACTIONS_FACT], max_files_per_trigger)
     pending = os.path.join(checkpoint, "pending_facts")
 
     def _batch(batch_df: DataFrame, _bid: int) -> None:
@@ -1969,12 +1907,7 @@ def streaming_public_actions(
             spark, batch_df, silver_paths, out_dir, processed_time, pending
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", os.path.join(checkpoint, "query"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, os.path.join(checkpoint, "query"))
 
 
 def flush_pending_actions(
@@ -1990,19 +1923,17 @@ def flush_pending_actions(
     number of facts still pending afterwards — facts whose dimensions
     never arrive keep waiting by design (the batch pipeline inner-join-
     drops them; late vs never is undecidable without a fence policy, and
-    a production deployment ages them out with the same trailing-window
-    rule the reference's re-MERGE uses)."""
-    import os
-
+    a production deployment ages them out with `expire_pending`, the
+    same trailing-window rule the reference's re-MERGE uses)."""
     pending = os.path.join(checkpoint, "pending_facts")
-    _recover(pending)
-    if not os.path.isdir(pending):
-        return 0
-    empty = spark.read.parquet(silver_paths[ACTIONS_FACT]).limit(0)
-    _fold_actions_batch(
-        spark, empty, silver_paths, out_dir, processed_time, pending
+    return _flush_parked(
+        spark,
+        pending,
+        silver_paths[ACTIONS_FACT],
+        lambda empty: _fold_actions_batch(
+            spark, empty, silver_paths, out_dir, processed_time, pending
+        ),
     )
-    return spark.read.parquet(pending).count()
 
 
 # --- streaming twins of the gold-table publishes (VERDICT r10 task #5) ------
@@ -2028,17 +1959,12 @@ def _fold_supply_batch(
     block has not arrived yet re-park. Supply rows are per-day facts —
     immutable once computed — so per-batch insert-only publish is exact
     (no snapshot-freeze hazard)."""
-    import os
-
     from near_public_lakehouse_spark.plans.public import (
         public_circulating_supply,
         publish_public_table,
     )
 
-    _recover(pending)
-    if os.path.isdir(pending):
-        rows = rows.unionByName(spark.read.parquet(pending))
-    rows = rows.dropDuplicates(["block_date", "block_height"]).localCheckpoint()
+    rows = _unpark(spark, rows, pending, ("block_date", "block_height"))
     blocks = spark.read.parquet(blocks_path)
     result = public_circulating_supply(rows, blocks, processed_time).localCheckpoint()
     publish_public_table(spark, "circulating_supply", result, out_dir)
@@ -2066,8 +1992,6 @@ def streaming_public_supply(
     dimension and publishes through the same insert-only MERGE, parking
     rows whose block row is late. Fold == batch pinned in
     tests/test_streaming_gold_publish.py."""
-    import os
-
     stream = _file_stream(spark, gold_supply_path, max_files_per_trigger)
     pending = os.path.join(checkpoint, "pending_supply")
 
@@ -2076,12 +2000,7 @@ def streaming_public_supply(
             spark, batch_df, blocks_path, out_dir, processed_time, pending
         )
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", os.path.join(checkpoint, "query"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, os.path.join(checkpoint, "query"))
 
 
 def flush_pending_supply(
@@ -2095,15 +2014,15 @@ def flush_pending_supply(
     """Retry parked supply rows against the CURRENT blocks table without
     new gold input. Returns the number still pending (blocks that never
     arrive keep waiting, same policy as the actions twin)."""
-    import os
-
     pending = os.path.join(checkpoint, "pending_supply")
-    _recover(pending)
-    if not os.path.isdir(pending):
-        return 0
-    empty = spark.read.parquet(gold_supply_path).limit(0)
-    _fold_supply_batch(spark, empty, blocks_path, out_dir, processed_time, pending)
-    return spark.read.parquet(pending).count()
+    return _flush_parked(
+        spark,
+        pending,
+        gold_supply_path,
+        lambda empty: _fold_supply_batch(
+            spark, empty, blocks_path, out_dir, processed_time, pending
+        ),
+    )
 
 
 def _fold_balances_batch(
@@ -2126,15 +2045,10 @@ def _fold_balances_batch(
     (`flush_pending_balances` does it without new input). A NULL
     block_date folds now (it can never satisfy a later fence; parking it
     would re-park forever)."""
-    import os
-
     from near_public_lakehouse_spark.operators.scd import latest_by
 
     _recover(state)
-    _recover(pending)
-    if os.path.isdir(pending):
-        changes = changes.unionByName(spark.read.parquet(pending))
-    changes = changes.localCheckpoint()
+    changes = _unpark(spark, changes, pending)
     beyond = changes.filter(F.col("block_date") > F.lit(epoch_date))
     fresh = changes.filter(
         F.coalesce(F.col("block_date") <= F.lit(epoch_date), F.lit(True))
@@ -2153,18 +2067,13 @@ def flush_pending_balances(
     advanced) epoch fence without new stream input — call after bumping
     the consumer's epoch_date at epoch close. Returns the number still
     parked (rows dated past even the new fence keep waiting)."""
-    import os
-
     pending = os.path.join(checkpoint, "pending_balances")
-    _recover(pending)
-    if not os.path.isdir(pending):
-        return 0
-    empty = spark.read.parquet(changes_path).limit(0)
-    _fold_balances_batch(
-        spark, empty, os.path.join(checkpoint, "balances_state"), epoch_date, pending
-    )
-    return (
-        spark.read.parquet(pending).count() if os.path.isdir(pending) else 0
+    state = os.path.join(checkpoint, "balances_state")
+    return _flush_parked(
+        spark,
+        pending,
+        changes_path,
+        lambda empty: _fold_balances_batch(spark, empty, state, epoch_date, pending),
     )
 
 
@@ -2189,8 +2098,6 @@ def streaming_public_balances(
     Feeding only latest-per-account rows into the batch snapshot frame
     is exact: `ac` enters silver_accounts_daily_ft_balances solely
     through latest-row-per-account selections (both W1 windows)."""
-    import os
-
     stream = _file_stream(spark, changes_path, max_files_per_trigger)
     state = os.path.join(checkpoint, "balances_state")
     pending = os.path.join(checkpoint, "pending_balances")
@@ -2198,12 +2105,7 @@ def streaming_public_balances(
     def _batch(batch_df: DataFrame, _bid: int) -> None:
         _fold_balances_batch(spark, batch_df, state, epoch_date, pending)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", os.path.join(checkpoint, "query"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _batch, os.path.join(checkpoint, "query"))
 
 
 def publish_balances_epoch(
@@ -2222,8 +2124,6 @@ def publish_balances_epoch(
     actions twin) and publish through the same insert-only
     publish_public_table the batch path uses. Idempotent: republishing
     the same epoch adds nothing."""
-    import os
-
     from near_public_lakehouse_spark.plans.balances import (
         silver_accounts_daily_ft_balances,
     )
@@ -2256,9 +2156,9 @@ def expire_pending(
     grow without bound on a misbehaving upstream. Dropping it matches
     the batch pipeline, whose inner joins silently drop the same rows.
     Returns the number of rows dropped; crash-safe via the same swap
-    discipline as the folds."""
-    import os
-
+    discipline as the folds. The actions twin parks at
+    ``<checkpoint>/pending_facts`` (date column ``block_date``; the
+    reference's actions re-MERGE window is 3 days)."""
     _recover(pending)
     if not os.path.isdir(pending):
         return 0
@@ -2272,24 +2172,10 @@ def expire_pending(
     return dropped
 
 
-def expire_pending_actions(
-    spark: SparkSession, checkpoint: str, as_of: str, fence_days: int = 3
-) -> int:
-    """Fence the actions twin's parked facts (default: the reference's
-    3-day actions re-MERGE window)."""
-    import os
-
-    return expire_pending(
-        spark, os.path.join(checkpoint, "pending_facts"), "block_date", as_of, fence_days
-    )
-
-
 def expire_pending_supply(
     spark: SparkSession, checkpoint: str, as_of: str, fence_days: int = 3
 ) -> int:
     """Fence the supply twin's parked gold rows."""
-    import os
-
     return expire_pending(
         spark, os.path.join(checkpoint, "pending_supply"), "block_date", as_of, fence_days
     )

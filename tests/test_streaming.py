@@ -487,3 +487,49 @@ def test_compact_substring_index_replay_fence(spark, tmp_path):
     # sanity: the fold's sidecar records exactly the absorbed dir
     with open(os.path.join(no_ck_index, "batch_id=-1", "_FOLDED")) as fh:
         assert json.load(fh) == ["batch_id=0"]
+
+
+def test_per_batch_store_replay_compaction_and_layout(spark, tmp_path):
+    """The one per-batch state store of the streaming folds
+    (`jobs._write_batch` / `jobs._read_batches`): a replayed batch id
+    replaces its own partial, the reader keeps reading a compacted
+    `batch_id=-1` dir, and state written by hand in the `<root>/batch_id=N`
+    layout folds to the same frame as state the writer produced."""
+    schema = "h string, n_docs long"
+    one = spark.createDataFrame([("a", 1), ("b", 2)], schema)
+    two = spark.createDataFrame([("a", 5)], schema)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("batch_id", "h", "n_docs").collect())
+
+    root = str(tmp_path / "idx")
+    jobs._write_batch(one, root, 0)
+    assert jobs._write_batch(two, root, 0) == os.path.join(root, "batch_id=0")
+    assert rows(jobs._read_batches(spark, root)) == [(0, "a", 5)]
+
+    jobs._write_batch(one, root, 1)
+    jobs._write_batch(one, root, 2)
+    # no checkpoint: the newest id stays unfolded, 0 and 1 fold into -1
+    assert jobs.compact_substring_index(spark, root) == 2
+    assert sorted(os.listdir(root)) == ["batch_id=-1", "batch_id=2"]
+    assert rows(jobs._read_batches(spark, root)) == [
+        (-1, "a", 6), (-1, "b", 2), (2, "a", 1), (2, "b", 2)
+    ]
+
+    # the same partials written by hand, as older builds laid them out
+    written, by_hand = str(tmp_path / "written"), str(tmp_path / "by_hand")
+    fp_schema = "fingerprint long, n_docs long, example_doc_id long"
+    for batch_id, fps in enumerate([[(10, 1, 3), (11, 2, 4)], [(10, 2, 1), (12, 1, 9)]]):
+        df = spark.createDataFrame(fps, fp_schema)
+        jobs._write_batch(df, f"{written}/fps", batch_id)
+        df.write.mode("overwrite").parquet(os.path.join(by_hand, "fps", f"batch_id={batch_id}"))
+    a, b = (jobs._read_batches(spark, f"{d}/fps") for d in (written, by_hand))
+    assert a.schema == b.schema
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    folded = [
+        tuple(r) for r in jobs.winnowing_matches_from_state(spark, by_hand).collect()
+    ]
+    assert folded == [
+        tuple(r) for r in jobs.winnowing_matches_from_state(spark, written).collect()
+    ]
+    assert folded == [(10, 3, 1), (11, 2, 4)]

@@ -141,6 +141,21 @@ def test_empty_table_roundtrips_schema(spark, tmp_path):
     assert got.schema == empty.schema
 
 
+def test_read_version_null_fills_a_column_older_files_lack(spark, tmp_path):
+    """The version's files disagree on columns: the old-schema file is
+    listed first and the widened append after it. The read takes the
+    manifest's recorded schema, not the first file's, so the added column
+    survives and the old rows read it as NULL."""
+    t = str(tmp_path / "t")
+    V.commit_overwrite(_df(spark, [(1, "a")]), t)
+    V.commit_append(spark.createDataFrame([(2, "b", 7)], "k int, v string, w int"), t)
+    m = V._read_manifest(t, 1)
+    assert m["files"][0] in V._read_manifest(t, 0)["files"]  # old file first
+    got = V.read_version(spark, t)
+    assert got.columns == ["k", "v", "w"]
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a", None), (2, "b", 7)]
+
+
 def test_versioned_upsert_matches_merge_semantics(spark, tmp_path):
     t = str(tmp_path / "t")
     v0 = V.versioned_upsert(spark, t, _df(spark, [(1, "a"), (2, "b")]), ["k"])
