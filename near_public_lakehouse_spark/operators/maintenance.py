@@ -58,7 +58,7 @@ def compact_partitions(
     `versioned.commit_compact`."""
     import os
 
-    from near_public_lakehouse_spark.operators.merge import _recover
+    from near_public_lakehouse_spark.operators.merge import _recover, read_table
 
     if os.path.isdir(os.path.join(table_path, "_delta_log")):
         raise ValueError(
@@ -68,7 +68,7 @@ def compact_partitions(
             "log's live files"
         )
     _recover(table_path)
-    df = spark.read.parquet(table_path)
+    df = read_table(spark, table_path)
     if partitions is not None:
         df = df.filter(F.col(partition_col).isin(partitions))
     # (partition, salt) keying: a plain repartition(N, partition_col)

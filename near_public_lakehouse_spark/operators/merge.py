@@ -11,15 +11,24 @@ partitions (NEAR Public Datasets.py:77-81,149-154). `partition_col`
 reproduces that: only partitions present in the source are read, merged and
 dynamically overwritten; untouched partitions are never opened. At 100 TB a
 daily merge then costs O(days-touched), not O(history).
+
+Schema: every write records the table's schema in ``<table>/_schema.json``
+(the Delta ``metaData`` action's role), and `read_table` reads under it.
+Spark's parquet reader skips ``_``-prefixed files, and the swaps below
+carry ``_`` entries, so data and schema move together.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from near_public_lakehouse_spark.streaming.evolution import merge_schemas
 
 
 def table_exists(path: str) -> bool:
@@ -40,9 +49,9 @@ def _recover(target_path: str) -> None:
     both per-partition-consistent) table and the merge recompute is safe.
 
     When the target EXISTS, only partition dirs (``col=value``) and
-    control-plane sidecars (``_``-prefixed, e.g. ``_delta_log``) are
-    restored: an unpartitioned crash AFTER the install leaves the old
-    loose part-files in the parked dir, and re-installing those beside
+    control-plane entries (``_``-prefixed: ``_delta_log``, the schema
+    record) are restored: an unpartitioned crash AFTER the install leaves
+    the old loose part-files in the parked dir, and re-installing those beside
     the already-swapped-in replacement would duplicate every pre-merge
     row (old and new part-file names never collide).
     """
@@ -62,8 +71,34 @@ def _recover(target_path: str) -> None:
             os.rename(src, live)
 
 
+def read_schema(path: str) -> StructType | None:
+    """The schema recorded in `path`'s ``_schema.json``, or None (no
+    table yet, or one written by an older build or another writer)."""
+    try:
+        with open(os.path.join(path, "_schema.json")) as f:
+            return StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return None
+
+
+def record_schema(path: str, schema: StructType) -> None:
+    """Replace `path`'s recorded schema in one rename (creating the dir:
+    a dir that holds only the record reads as an empty typed table)."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, "._schema.json.tmp")
+    with open(tmp, "w") as f:
+        f.write(schema.json())
+    os.replace(tmp, os.path.join(path, "_schema.json"))
+
+
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The parquet table at `path`, under its recorded schema when it has
+    one: files that predate an added column read it as NULL, whichever
+    file Spark would have taken the schema from, and no footer-reading
+    job runs. Without a record, Spark infers the schema."""
+    schema = read_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def write_table(
@@ -73,11 +108,12 @@ def write_table(
     options: dict[str, str] | None = None,
 ) -> None:
     """Overwrite the parquet table at `path` with `df`, hive-partitioned
-    on `partition_col` when given."""
+    on `partition_col` when given, and record `df`'s schema."""
     writer = df.write.mode("overwrite").options(**(options or {}))
     if partition_col:
         writer = writer.partitionBy(partition_col)
     writer.parquet(path)
+    record_schema(path, df.schema)
 
 
 def _partition_fence(source: DataFrame, partition_col: str):
@@ -98,8 +134,8 @@ def _partition_fence(source: DataFrame, partition_col: str):
 
 def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Null-fill each frame's missing columns so both carry the UNION of
-    the two schemas (a's column order first) — the sidecar drift policy
-    applied at the operator level."""
+    the two schemas (a's column order first) — drift-as-nulls, never a
+    drop, as `read_table` applies it to files that predate a column."""
     a_types = {f.name: f.dataType for f in a.schema.fields}
     b_types = {f.name: f.dataType for f in b.schema.fields}
     for c in [c for c in b.columns if c not in a_types]:
@@ -133,8 +169,9 @@ def merge_upsert(
     Schema drift (T8): a source that carries columns the stored table
     lacks (a widened stream after a restart), or lacks stored columns (a
     narrowed one), is aligned by `merged_frame` to the UNION with
-    null-fill on both sides — the sidecar policy (drift-as-nulls, never
-    a drop).
+    null-fill on both sides (drift-as-nulls, never a drop); the touched
+    partitions' rewrite records the union, so the untouched ones read the
+    new column as NULL.
 
     Source must be unique per key (pre-dedup with operators.scd.latest_by),
     and `partition_col` must be STABLE per key: the fence only rewrites
@@ -253,9 +290,9 @@ def drop_stale(
 def _swap_in(tmp: str, target_path: str) -> None:
     """Install the materialized dir `tmp` as `target_path` by renames:
     park the live dir as ``.__old__``, move `tmp` into place, carry the
-    control-plane sidecars (``_``-prefixed: ``_delta_log``, schema
-    sidecars) that live inside the table root but are not produced by the
-    rewrite, then drop the parked copy. A target that does not exist yet
+    control-plane entries (``_``-prefixed: ``_delta_log``, and the
+    ``_schema.json`` record when `tmp` has none) that live inside the
+    table root, then drop the parked copy. A target that does not exist yet
     is simply renamed into place. A crash between park and install leaves
     the parked dir as the only copy, which `_recover` re-installs — so
     callers run `_recover` before materializing `tmp`, and any parked dir
@@ -294,7 +331,9 @@ def _rewrite(
       ``col=value.__old__`` inside the root would be misparsed as a
       partition value on read). A crash mid-swap leaves every partition
       either fully-old or fully-new — never half-written — and the tmp
-      dir survives for re-apply.
+      dir survives for re-apply. The union of the recorded and the new
+      schema is recorded BEFORE the first rename, so no crash point
+      hides a column from the partitions already swapped.
 
     This replaces the round-1 dynamic-partition-overwrite path, which
     wrote directly onto the table while reading it and leaked the session
@@ -315,6 +354,8 @@ def _rewrite(
         _swap_in(tmp, target_path)
         return
 
+    prior = read_schema(target_path)
+    record_schema(target_path, merge_schemas(prior, df.schema) if prior else df.schema)
     os.makedirs(parked, exist_ok=True)
     for name in sorted(os.listdir(tmp)):
         new_part = os.path.join(tmp, name)

@@ -342,9 +342,10 @@ def apply_changes_scd2(
         write_table(hist, target_path, part)
         return
     stored = read_table(spark, target_path)
-    # A feed that widens the schema rewrites every bucket: an untouched
-    # partition would keep files without the new column, and a parquet
-    # read takes its schema from one file, so the column could vanish.
+    # A feed that widens the schema rewrites every bucket. `read_table`
+    # would null-fill an untouched bucket through the recorded schema,
+    # but a reader that ignores the record (a plain parquet read takes
+    # its schema from one file) could lose the new column.
     if n_buckets and set(updates.columns) <= set(stored.columns):
         touched = _touched_buckets(updates, keys, n_buckets)
         stored = stored.filter(F.col(BUCKET_COL).isin(touched))  # partition-pruned scan

@@ -21,9 +21,10 @@ task #7):
   nulls for files that lack the new field, so the widened stream needs
   no rewrite of old data.
 - `Pipeline` integration (`streaming/runner.py`): in incremental mode
-  the schema sidecar MERGES instead of overwrites, so a field added
-  mid-stream survives restarts, and reads of pre-addition parquet files
-  (which simply lack the column) null-backfill via the union sidecar
+  each write unions the schema recorded in the table dir
+  (`operators.merge.record_schema`) instead of replacing it, so a field
+  added mid-stream survives restarts, and reads of pre-addition parquet
+  files (which simply lack the column) null-backfill via the union
   schema — parquet's missing-column semantics give relaxation for free.
 
 Scale note: schema inference probes at most `probe_files` newest files

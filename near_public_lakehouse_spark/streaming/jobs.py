@@ -21,13 +21,14 @@ the JVM heap; checkpoints make every query restartable.
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from near_public_lakehouse_spark.operators.merge import _recover, _rewrite
+from near_public_lakehouse_spark.operators.merge import _recover, _rewrite, read_table
 
 ROCKSDB_CONF = {
     "spark.sql.streaming.stateStore.providerClass": (
@@ -87,7 +88,12 @@ def _read_batches(spark: SparkSession, root: str, merge_schema: bool = False) ->
     r = spark.read.option("basePath", root)
     if merge_schema:
         r = r.option("mergeSchema", "true")
-    return r.parquet(f"{root}/batch_id=*")
+    # The batch dirs are listed, not passed as one glob: Spark probes a
+    # single path for a streaming sink's metadata dir, and on a glob that
+    # probe fails and logs a stack trace. A root with no batch dir still
+    # raises PATH_NOT_FOUND through the glob.
+    pattern = f"{root}/batch_id=*"
+    return r.parquet(*(sorted(glob.glob(pattern)) or [pattern]))
 
 
 def _stream_path(path: str) -> str:
@@ -239,8 +245,6 @@ def sessionizer_state_version(checkpoint_dir: str) -> int | None:
     per-partition `state/0/*/_metadata/schema` files Spark's state-schema
     compatibility checker writes — the same artifact that makes a
     mismatched resume fail, so detection and enforcement cannot drift."""
-    import glob
-
     for path in sorted(
         glob.glob(os.path.join(checkpoint_dir, "state", "0", "*", "_metadata", "schema"))
     ):
@@ -953,7 +957,6 @@ def compact_substring_index(
     cases. At 100 TB scale the same fold writes a bucketed-by-hash table
     and the cleaner's per-trigger read becomes a bucket-pruned join (see
     streaming_substring_clean's docstring)."""
-    import glob as _glob
     import json
     import shutil
 
@@ -979,7 +982,7 @@ def compact_substring_index(
     _promote_and_clean()
     dirs = sorted(
         d
-        for d in _glob.glob(os.path.join(index_path, "batch_id=*"))
+        for d in glob.glob(os.path.join(index_path, "batch_id=*"))
         if os.path.basename(d) != "batch_id=-1"
     )
 
@@ -1788,7 +1791,7 @@ def _unpark(
     row), materialized so the batch may then rewrite `pending`."""
     _recover(pending)
     if os.path.isdir(pending):
-        rows = rows.unionByName(spark.read.parquet(pending))
+        rows = rows.unionByName(read_table(spark, pending))
     if keys:
         rows = rows.dropDuplicates(list(keys))
     return rows.localCheckpoint()
@@ -1802,7 +1805,7 @@ def _flush_parked(spark: SparkSession, pending: str, source_path: str, fold) -> 
     if not os.path.isdir(pending):
         return 0
     fold(spark.read.parquet(source_path).limit(0))
-    return spark.read.parquet(pending).count() if os.path.isdir(pending) else 0
+    return read_table(spark, pending).count() if os.path.isdir(pending) else 0
 
 
 ACTIONS_FACT = "silver_action_receipt_actions"
@@ -2054,7 +2057,7 @@ def _fold_balances_batch(
         F.coalesce(F.col("block_date") <= F.lit(epoch_date), F.lit(True))
     )
     if os.path.isdir(state):
-        fresh = fresh.unionByName(spark.read.parquet(state))
+        fresh = fresh.unionByName(read_table(spark, state))
     folded = latest_by(fresh, ["affected_account_id"], "block_height")
     _rewrite(spark, folded, state, None)
     _rewrite(spark, beyond, pending, None)
@@ -2134,7 +2137,7 @@ def publish_balances_epoch(
 
     state = os.path.join(checkpoint, "balances_state")
     _recover(state)
-    ac = spark.read.parquet(state)
+    ac = read_table(spark, state)
     amb = spark.read.parquet(amb_path)
     rewards = spark.read.parquet(rewards_path)
     snap = silver_accounts_daily_ft_balances(
@@ -2162,7 +2165,7 @@ def expire_pending(
     _recover(pending)
     if not os.path.isdir(pending):
         return 0
-    cur = spark.read.parquet(pending)
+    cur = read_table(spark, pending)
     keep = cur.filter(
         F.col(date_col) >= F.date_sub(F.lit(as_of).cast("date"), fence_days)
     )

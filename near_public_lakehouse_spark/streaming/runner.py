@@ -44,11 +44,21 @@ import shutil
 from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
-from near_public_lakehouse_spark.operators.merge import _recover, _swap_in, write_table
+from near_public_lakehouse_spark.operators.merge import (
+    _recover,
+    _swap_in,
+    read_schema,
+    read_table,
+    record_schema,
+    write_table,
+)
+from near_public_lakehouse_spark.streaming.evolution import merge_schemas
 
 
 @dataclass
@@ -83,31 +93,6 @@ class Pipeline:
     def path(self, name: str) -> str:
         return os.path.join(self.out_dir, name)
 
-    def _sidecar(self, name: str) -> str:
-        return os.path.join(self.out_dir, name + ".schema.json")
-
-    def _save_schema(self, name: str, df: DataFrame, merge: bool = False) -> None:
-        """Write the schema sidecar. With `merge=True` (incremental mode)
-        the new schema UNIONS with the existing sidecar — T8 field
-        addition: a column added mid-stream widens the sidecar, and
-        reads of pre-addition parquet files (which lack the column)
-        null-backfill through the union schema; a column that disappears
-        stays in the sidecar (drift-as-nulls, never a drop)."""
-        schema = df.schema
-        sidecar = self._sidecar(name)
-        if merge and os.path.exists(sidecar):
-            import json
-
-            from pyspark.sql.types import StructType
-
-            from near_public_lakehouse_spark.streaming.evolution import merge_schemas
-
-            with open(sidecar) as f:
-                prior = StructType.fromJson(json.loads(f.read()))
-            schema = merge_schemas(prior, schema)
-        with open(sidecar, "w") as f:
-            f.write(schema.json())
-
     def _topo_order(self) -> list[TableDef]:
         order: list[TableDef] = []
         done: set[str] = set()
@@ -131,22 +116,8 @@ class Pipeline:
         return order
 
     def read(self, name: str) -> DataFrame:
-        """Read a materialized table. The schema sidecar (written at build
-        time) makes empty tables readable — a schema-less parquet read of a
-        zero-file directory cannot infer one, and a foreachBatch node whose
-        availableNow stream processed ZERO batches never created the
-        directory at all (sidecar present, path absent — r13 review):
-        both read as an empty frame with the declared schema."""
-        sidecar = self._sidecar(name)
-        if os.path.exists(sidecar):
-            from pyspark.sql.types import StructType
-
-            with open(sidecar) as f:
-                schema = StructType.fromJson(__import__("json").loads(f.read()))
-            if not os.path.isdir(self.path(name)):
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(self.path(name))
-        return self.spark.read.parquet(self.path(name))
+        """A materialized table, under the schema recorded in its dir."""
+        return read_table(self.spark, self.path(name))
 
     def _run_dag(self, refresh: Callable[[TableDef], None]) -> None:
         """Run `refresh(t)` for every node, each as soon as all of its
@@ -187,11 +158,23 @@ class Pipeline:
         if error is not None:
             raise error
 
-    def _overwrite(self, t: TableDef, df: DataFrame) -> None:
+    def _overwrite(self, t: TableDef, df: DataFrame, prior: StructType | None = None) -> None:
         """Stateless node: replace the table with `df`, partitioned by the
-        node's `partition_by` column when the frame carries it."""
+        node's `partition_by` column when the frame carries it. Given the
+        table's `prior` record (incremental mode), the replacement is
+        written beside the table, records `merge_schemas(prior, df.schema)`
+        and is swapped in, so data and widened record land in one rename
+        and no crash leaves a narrowed record."""
+        path = self.path(t.name)
         part = t.partition_by if t.partition_by in df.columns else None
-        write_table(df, self.path(t.name), part)
+        if prior is None:
+            write_table(df, path, part)
+            return
+        tmp = path + ".__refresh__"
+        shutil.rmtree(tmp, ignore_errors=True)
+        write_table(df, tmp, part)
+        record_schema(tmp, merge_schemas(prior, df.schema))
+        _swap_in(tmp, path)
 
     def run_batch(self, sources: dict[str, DataFrame]) -> None:
         """Full refresh: build every table as its deps finish, parquet it.
@@ -212,7 +195,6 @@ class Pipeline:
         def refresh(t: TableDef) -> None:
             inputs = {d: built[d] for d in t.deps}
             df = t.build(self.spark, inputs)
-            self._save_schema(t.name, df)
             if t.apply is not None:
                 path = self.path(t.name)
                 tmp = path + ".__refresh__"
@@ -269,19 +251,20 @@ class Pipeline:
                 else:
                     inputs[d] = self.read(d)
             df = t.build(self.spark, inputs)
-            self._save_schema(t.name, df, merge=True)
+            path = self.path(t.name)
             ckpt = os.path.join(checkpoint_dir, t.name)
+            _recover(path)  # a parked table is live again before its record is read
+            prior = read_schema(path)
             if not df.isStreaming:
                 # No streamable dep: batch rebuild (stateful nodes still go
                 # through their apply fn — SCD state must fold, not be
                 # replaced by the raw change feed).
                 if t.apply is not None:
-                    t.apply(self.spark, df, self.path(t.name))
+                    t.apply(self.spark, df, path)
                 else:
-                    self._overwrite(t, df)
-                return
-            if t.apply is not None:
-                apply_fn, spark, path = t.apply, self.spark, self.path(t.name)
+                    self._overwrite(t, df, prior)
+            elif t.apply is not None:
+                apply_fn, spark = t.apply, self.spark
 
                 def _fb(batch_df: DataFrame, _bid: int, _a=apply_fn, _s=spark, _p=path):
                     _a(_s, batch_df, _p)
@@ -292,16 +275,25 @@ class Pipeline:
                     .trigger(availableNow=True)
                     .start()
                 )
+                q.awaitTermination()
             else:
                 writer = (
                     df.writeStream.format("parquet")
-                    .option("path", self.path(t.name))
+                    .option("path", path)
                     .option("checkpointLocation", ckpt)
                     .trigger(availableNow=True)
                 )
                 if t.partition_by and t.partition_by in df.columns:
                     writer = writer.partitionBy(t.partition_by)
                 q = writer.start()
-            q.awaitTermination()
+                q.awaitTermination()
+            # T8, recorded only after the write: the record only widens. It
+            # is the union of the record before the write, the record the
+            # write left (an apply's own columns, such as SCD2 history) and
+            # the build's schema: a column added mid-stream joins it, and
+            # one the build no longer produces stays and reads back NULL
+            # (drift-as-nulls, never a drop).
+            known = [s for s in (prior, read_schema(path), df.schema) if s is not None]
+            record_schema(path, reduce(merge_schemas, known))
 
         self._run_dag(refresh)

@@ -893,3 +893,101 @@ def test_scd1_ignore_null_updates_stale_change_supplies_nothing(spark, tmp_path,
     apply([(1, "OLD", 3), (1, None, 7), (2, "NEW", 6), (3, None, 1), (3, "Z", 0)])
     got = sorted((r.k, r.perm, r.seq) for r in spark.read.parquet(path).collect())
     assert got == [(1, "X", 7), (2, "NEW", 6), (3, "Z", 1)]
+
+
+# --- one recorded schema per table: <table>/_schema.json ---------------------
+
+
+def test_merge_partitioned_widened_source_null_fills_old_partitions(spark, target):
+    """A widened source that touches only the last partition: `read_table`
+    reads every partition under the recorded union, so the untouched
+    partitions' rows come back with the new column NULL instead of the
+    column vanishing with the file Spark would infer the schema from."""
+    from near_public_lakehouse_spark.operators.merge import read_table
+
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame(
+            [(1, "a", "2024-01-01"), (2, "b", "2024-01-02"), (3, "c", "2024-01-03")],
+            "k int, v string, d string",
+        ),
+        ["k"],
+        partition_col="d",
+    )
+    merge_upsert(
+        spark,
+        target,
+        spark.createDataFrame([(3, "C", "2024-01-03", 7)], "k int, v string, d string, x int"),
+        ["k"],
+        partition_col="d",
+    )
+    got = read_table(spark, target)
+    assert "x" in got.columns
+    assert {r.k: (r.v, r.x, r.d) for r in got.collect()} == {
+        1: ("a", None, "2024-01-01"),
+        2: ("b", None, "2024-01-02"),
+        3: ("C", 7, "2024-01-03"),
+    }
+
+
+def test_scd1_bucketed_widened_source_null_fills_old_buckets(spark, target):
+    """`apply_changes(n_buckets=4)` with a one-key widened batch rewrites
+    only that key's bucket; the other buckets read the new column as NULL
+    through the recorded schema."""
+    from near_public_lakehouse_spark.operators.merge import read_table
+    from near_public_lakehouse_spark.operators.scd import _bucket_of
+
+    init = spark.createDataFrame([(i, "a", 10) for i in range(20)], "k int, v string, seq int")
+    apply_changes(spark, target, init, ["k"], "seq", n_buckets=4)
+    # a key in the highest bucket, so the widened files are not the first
+    # ones listed, which an inferring read would take its schema from
+    by_bucket = {
+        r.b: r.k for r in init.select("k", _bucket_of(["k"], 4).alias("b")).collect()
+    }
+    key = by_bucket[max(by_bucket)]
+    apply_changes(
+        spark,
+        target,
+        spark.createDataFrame([(key, "w", 20, 1.5)], "k int, v string, seq int, x double"),
+        ["k"],
+        "seq",
+        n_buckets=4,
+    )
+    got = {r.k: (r.v, r.x) for r in read_table(spark, target).collect()}
+    assert len(got) == 20 and got[key] == ("w", 1.5)
+    assert all(got[k] == ("a", None) for k in got if k != key)
+
+
+def test_runner_incremental_restores_parked_table_before_fold(spark, tmp_path):
+    """Crash window of an unpartitioned stateful node: the table is parked
+    as ``.__old__`` and the live dir is absent. The next `run_incremental`
+    refresh restores it, then folds the new changes into it, and its
+    recorded schema keeps the parked table's columns."""
+    import os
+
+    from near_public_lakehouse_spark.streaming.runner import Pipeline
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    pipe = Pipeline(spark, out)
+
+    @pipe.table(
+        "state",
+        deps=["src"],
+        partition_by=None,
+        apply=lambda s, df, p: apply_changes(s, p, df, ["k"], "seq"),
+    )
+    def _state(s, inputs):
+        return inputs["src"]
+
+    def wave(rows, schema):
+        df = spark.createDataFrame(rows, schema)
+        pipe.run_incremental({"src": lambda s, streaming: df}, ckpt)
+
+    wave([(1, "a", 1, "e1"), (2, "b", 1, "e2")], "k int, v string, seq int, extra string")
+    live = pipe.path("state")
+    os.rename(live, live + ".__old__")  # crash after parking, before install
+    wave([(2, "B", 2), (3, "c", 2)], "k int, v string, seq int")
+    assert not os.path.exists(live + ".__old__")
+    got = {r.k: (r.v, r.seq, r.extra) for r in pipe.read("state").collect()}
+    assert got == {1: ("a", 1, "e1"), 2: ("B", 2, None), 3: ("c", 2, None)}

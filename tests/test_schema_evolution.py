@@ -133,10 +133,10 @@ def test_field_added_mid_stream_reads_back_post_restart(spark, tmp_path):
         assert rows[i].fee is None  # pre-addition rows null-backfill
     for i in range(3, 6):
         assert rows[i].fee == pytest.approx(i * 0.1)
-    # the sidecar now declares the union schema durably
-    with open(os.path.join(out, "events.schema.json")) as fh:
-        side = StructType.fromJson(json.load(fh))
-    assert "fee" in side.fieldNames()
+    # the table dir's schema record now declares the union durably
+    with open(os.path.join(out, "events", "_schema.json")) as fh:
+        recorded = StructType.fromJson(json.load(fh))
+    assert "fee" in recorded.fieldNames()
 
 
 def test_bronze_block_source_evolves_new_field(spark, tmp_path):
@@ -237,18 +237,138 @@ def test_scd_nodes_survive_schema_drift(spark, tmp_path):
 
 def test_runner_read_handles_zero_batch_apply_node(spark, tmp_path):
     """r13 review: a foreachBatch node whose availableNow stream processed
-    ZERO batches writes its sidecar but never creates the directory — a
-    dependent's read() must yield an empty typed frame, not
-    PATH_NOT_FOUND."""
+    ZERO batches never writes its table — a dependent's read() must yield
+    an empty typed frame, not PATH_NOT_FOUND."""
+    from near_public_lakehouse_spark.operators.scd import apply_changes
     from near_public_lakehouse_spark.streaming.runner import Pipeline
 
-    out = str(tmp_path / "out")
-    os.makedirs(out)
+    land, out, ckpt = (str(tmp_path / n) for n in ("land", "out", "ckpt"))
+    os.makedirs(land)  # nothing has landed
     pipe = Pipeline(spark, out)
-    with open(os.path.join(out, "ghost.schema.json"), "w") as fh:
-        fh.write(_s(("k", LongType())).json())
-    got = pipe.read("ghost")
-    assert got.columns == ["k"] and got.count() == 0
+
+    @pipe.table(
+        "ghost",
+        deps=["raw"],
+        partition_by=None,
+        apply=lambda s, df, p: apply_changes(s, p, df, ["k"], "seq"),
+    )
+    def _ghost(s, inputs):
+        return inputs["raw"]
+
+    @pipe.table("after", deps=["ghost"], partition_by=None)
+    def _after(s, inputs):
+        return inputs["ghost"]
+
+    def src(s, streaming):
+        r = s.readStream if streaming else s.read
+        return r.schema(_s(("k", LongType()), ("seq", LongType()))).json(land)
+
+    pipe.run_incremental({"raw": src}, ckpt)
+    for name in ("ghost", "after"):
+        got = pipe.read(name)
+        assert got.columns == ["k", "seq"] and got.count() == 0
+
+
+def test_runner_incremental_keeps_dropped_column(spark, tmp_path):
+    """The T8 union rule through a batch-rebuilt node: a build that stops
+    producing a column on the next wave overwrites the table without it,
+    and the column still reads back, NULL (drift-as-nulls, never a
+    drop)."""
+    from near_public_lakehouse_spark.streaming.runner import Pipeline
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    pipe = Pipeline(spark, out)
+    waves = [
+        spark.createDataFrame([(1, "a", 1.5)], "k long, v string, score double"),
+        spark.createDataFrame([(2, "b")], "k long, v string"),
+    ]
+
+    @pipe.table("t", deps=["src"], partition_by=None)
+    def _t(s, inputs):
+        return inputs["src"]
+
+    for df in waves:
+        pipe.run_incremental({"src": lambda s, streaming, _df=df: _df}, ckpt)
+    got = pipe.read("t")
+    assert got.columns == ["k", "v", "score"]
+    assert [tuple(r) for r in got.collect()] == [(2, "b", None)]
+
+
+def test_runner_incremental_overwrite_installs_union_with_data(spark, tmp_path, monkeypatch):
+    """A batch-rebuilt node's replacement carries the widened record in
+    the same swap as its data: a crash after the swap, before the
+    runner's own record, still leaves the column the build dropped in
+    the record, so the next wave does not lose it for good."""
+    from near_public_lakehouse_spark.operators.merge import read_schema
+    from near_public_lakehouse_spark.streaming import runner
+
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    pipe = runner.Pipeline(spark, out)
+    waves = [
+        spark.createDataFrame([(1, "a", 1.5)], "k long, v string, score double"),
+        spark.createDataFrame([(2, "b")], "k long, v string"),
+    ]
+
+    @pipe.table("t", deps=["src"], partition_by=None)
+    def _t(s, inputs):
+        return inputs["src"]
+
+    pipe.run_incremental({"src": lambda s, streaming, _df=waves[0]: _df}, ckpt)
+    record = runner.record_schema
+
+    def crash_on_live_record(path, schema):
+        if path == pipe.path("t"):
+            raise RuntimeError("crash before the runner's record")
+        record(path, schema)
+
+    monkeypatch.setattr(runner, "record_schema", crash_on_live_record)
+    with pytest.raises(RuntimeError, match="crash before"):
+        pipe.run_incremental({"src": lambda s, streaming, _df=waves[1]: _df}, ckpt)
+    assert read_schema(pipe.path("t")).fieldNames() == ["k", "v", "score"]
+    assert [tuple(r) for r in pipe.read("t").collect()] == [(2, "b", None)]
+
+
+def test_runner_incremental_keeps_columns_the_apply_adds(spark, tmp_path):
+    """An apply node whose table carries columns its feed does not (SCD2
+    history) keeps them in the record: the next wave's apply reads its
+    stored history back through that record. The first wave processes
+    zero batches, so the record starts as the feed's schema; the waves
+    after it must widen it with the history columns, not replace it with
+    the feed's again."""
+    from near_public_lakehouse_spark.operators.scd import (
+        CURRENT_COL,
+        SEQS_COL,
+        START_COL,
+        apply_changes_scd2,
+    )
+    from near_public_lakehouse_spark.streaming.runner import Pipeline
+
+    land, out, ckpt = (str(tmp_path / n) for n in ("land", "out", "ckpt"))
+    os.makedirs(land)  # nothing has landed before the first wave
+    pipe = Pipeline(spark, out)
+
+    @pipe.table(
+        "hist",
+        deps=["src"],
+        partition_by=None,
+        apply=lambda s, df, p: apply_changes_scd2(s, p, df, ["k"], "seq"),
+    )
+    def _hist(s, inputs):
+        return inputs["src"]
+
+    def src(s, streaming):
+        r = s.readStream if streaming else s.read
+        return r.schema("k long, v string, seq long").json(land)
+
+    pipe.run_incremental({"src": src}, ckpt)
+    assert pipe.read("hist").columns == ["k", "v", "seq"]
+    for i, row in enumerate([{"k": 1, "v": "a", "seq": 1}, {"k": 1, "v": "b", "seq": 2}]):
+        with open(os.path.join(land, f"wave{i}.json"), "w") as fh:
+            fh.write(json.dumps(row) + "\n")
+        pipe.run_incremental({"src": src}, ckpt)
+        assert {START_COL, CURRENT_COL, SEQS_COL} <= set(pipe.read("hist").columns)
+    got = sorted((r.v, r[CURRENT_COL]) for r in pipe.read("hist").collect())
+    assert got == [("a", False), ("b", True)]
 
 
 def test_runner_batch_swap_recovers_parked_state(spark, tmp_path):

@@ -5,9 +5,11 @@ watermark actually advances between batches."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from near_public_lakehouse_spark.streaming import jobs
@@ -489,6 +491,30 @@ def test_compact_substring_index_replay_fence(spark, tmp_path):
         assert json.load(fh) == ["batch_id=0"]
 
 
+@contextlib.contextmanager
+def _jvm_log(spark):
+    """A StringWriter that receives everything the driver JVM logs inside
+    the block (a log4j2 appender on the root logger)."""
+    ctx = spark._jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root_logger = ctx.getConfiguration().getRootLogger()
+    text = spark._jvm.java.io.StringWriter()
+    appender = (
+        spark._jvm.org.apache.logging.log4j.core.appender.WriterAppender.newBuilder()
+        .setTarget(text)
+        .setName("test-capture")
+        .build()
+    )
+    appender.start()
+    root_logger.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        yield text
+    finally:
+        root_logger.removeAppender("test-capture")
+        ctx.updateLoggers()
+        appender.stop()
+
+
 def test_per_batch_store_replay_compaction_and_layout(spark, tmp_path):
     """The one per-batch state store of the streaming folds
     (`jobs._write_batch` / `jobs._read_batches`): a replayed batch id
@@ -506,6 +532,21 @@ def test_per_batch_store_replay_compaction_and_layout(spark, tmp_path):
     jobs._write_batch(one, root, 0)
     assert jobs._write_batch(two, root, 0) == os.path.join(root, "batch_id=0")
     assert rows(jobs._read_batches(spark, root)) == [(0, "a", 5)]
+
+    # The reader lists the batch dirs: Spark probes a single glob path for
+    # a sink metadata dir and logs a WARN with a stack trace when it fails
+    # (the glob read below shows the capture sees it).
+    with _jvm_log(spark) as log:
+        jobs._read_batches(spark, root).count()
+    assert "Assume no metadata directory" not in log.toString()
+    with _jvm_log(spark) as log:
+        spark.read.option("basePath", root).parquet(f"{root}/batch_id=*").count()
+    assert "Assume no metadata directory" in log.toString()
+    # a root without batch dirs, absent or empty, raises as the glob read did
+    os.makedirs(tmp_path / "empty")
+    for bare in ("absent", "empty"):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            jobs._read_batches(spark, str(tmp_path / bare))
 
     jobs._write_batch(one, root, 1)
     jobs._write_batch(one, root, 2)
