@@ -5,16 +5,22 @@ needs, item (a)).
 Each node declares (name, deps, build_fn); the runner materializes each
 table to parquet partitioned by `block_date`. Both modes share one
 ready-set scheduler, `Pipeline._run_dag`, the way a DLT update runs flows
-that do not depend on each other at the same time: a node is handed to a
-driver thread pool as soon as every in-pipeline dep has finished, so
-independent nodes plan, launch jobs, stream and commit concurrently on one
-SparkContext. The pool is as wide as the context's task slots
-(`defaultParallelism`); the ready set caps it in practice. Jobs share
-Spark's default FIFO scheduler, and every node inherits the caller's local
+that do not depend on each other at the same time: a node becomes ready
+once every in-pipeline dep has finished, and independent nodes plan,
+launch jobs, stream and commit concurrently on one SparkContext. The
+driver thread pool is as wide as the context's task slots
+(`defaultParallelism`), and a ready node is handed to it only when a
+thread is free: critical path first, the ready node with the largest
+upward rank (HEFT's list-scheduling rank: the node's seconds plus the
+largest rank among its dependents). The seconds are the previous run's,
+from `<out_dir>/_nodes.json`, which every run replaces in one rename; it
+holds each node's wall seconds, regime and the bytes its size gate
+counted, and a node with no record weighs 1 s. Jobs share Spark's
+default FIFO scheduler, and every node inherits the caller's local
 properties (job group, description), so `cancelJobGroup` reaches all of
-them. On the first node failure no further node starts; the nodes already
-running drain (each awaits its own query), and that first error is
-re-raised.
+them. On the first node failure no further node starts; the nodes
+already running drain (each awaits its own query), and that first error
+is re-raised.
 
 In incremental mode the fact-side bronze source is a Structured Streaming
 file/parquet stream with `trigger(availableNow=True)` and a checkpoint —
@@ -22,6 +28,19 @@ the same resume contract as DLT's streaming live tables (T2/T3) — while
 dimension-side inputs are re-read per micro-batch (stream-static join; the
 blocks side of J1 is complete by the time a shard batch lands, because a
 shard node starts only after `silver_blocks` has finished).
+
+Incremental nodes run in one of three regimes. A node with a stream
+source is `streamed`, in the caller's session: its micro-batch size is
+unknown until the trigger runs. A batch node whose inputs (its deps'
+table dirs, plus its own dir for an `apply` node) hold fewer bytes than
+`spark.sql.autoBroadcastJoinThreshold` is `interpreted`: it reads,
+builds and writes in a session that interprets expressions instead of
+generating and compiling code for them, because at a few hundred rows
+the Janino compile costs more than the query. A threshold of -1
+(broadcast off) makes no node small, and larger nodes stay `compiled`,
+in the caller's session. `run_batch` keeps the caller's session for
+every node: its source frames are bound to it, and a full refresh reads
+all of history.
 
 Stateful nodes (an `apply` fn: the SCD1 APPLY CHANGES tables and the
 insert-only publish tables) all fold through the one keyed-MERGE core,
@@ -39,8 +58,10 @@ which is how OSS expresses APPLY CHANGES (SURVEY §2.5 A8).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import time
 from collections.abc import Callable
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
@@ -58,7 +79,51 @@ from near_public_lakehouse_spark.operators.merge import (
     record_schema,
     write_table,
 )
+from near_public_lakehouse_spark.session import parse_size_bytes
 from near_public_lakehouse_spark.streaming.evolution import merge_schemas
+
+# Confs of the session small batch nodes run in: no whole-stage codegen,
+# and every expression interpreted. `factoryMode` is an internal conf;
+# Spark's own expression test suites set it to NO_CODEGEN to run every
+# expression through its interpreted path.
+_INTERPRETED_CONF = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+
+
+def _interpreted_session(spark: SparkSession) -> SparkSession:
+    """A new session on `spark`'s context that interprets instead of
+    compiling. Every modifiable conf of `spark` is copied first:
+    `newSession()` alone drops confs set at runtime, such as a caller's
+    session timezone."""
+    session = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            session.conf.set(k, v)
+    for k, v in _INTERPRETED_CONF.items():
+        session.conf.set(k, v)
+    return session
+
+
+def _bytes_until(paths: list[str], bound: int) -> int:
+    """Bytes of the files under `paths`, counted only until they reach
+    `bound`, so a large table costs a short walk. Missing dirs count 0."""
+    total, stack = 0, list(paths)
+    while stack and total < bound:
+        try:
+            entries = os.scandir(stack.pop())
+        except FileNotFoundError:
+            continue
+        with entries:
+            for e in entries:
+                if e.is_dir(follow_symlinks=False):
+                    stack.append(e.path)
+                else:
+                    total += e.stat(follow_symlinks=False).st_size
+                    if total >= bound:
+                        break
+    return total
 
 
 @dataclass
@@ -119,12 +184,19 @@ class Pipeline:
         """A materialized table, under the schema recorded in its dir."""
         return read_table(self.spark, self.path(name))
 
-    def _run_dag(self, refresh: Callable[[TableDef], None]) -> None:
-        """Run `refresh(t)` for every node, each as soon as all of its
-        in-pipeline deps have finished, on `defaultParallelism` driver
-        threads. Each call inherits the caller's local properties as they
-        are when the node is submitted. On the first failure no further
-        node starts; the running ones drain, then that error is raised."""
+    def _run_dag(self, refresh: Callable[[TableDef], tuple[str, int | None]]) -> None:
+        """Run `refresh(t)` for every node once all of its in-pipeline
+        deps have finished, on `defaultParallelism` driver threads. A
+        ready node is submitted only when a thread is free, largest
+        upward rank first (ties in topological order), weighted by the
+        previous run's `_nodes.json`. Each call inherits the caller's
+        local properties as they are when the node is submitted. On the
+        first failure no further node starts; the running ones drain,
+        the record is replaced, then that error is raised.
+
+        `refresh(t)` returns the node's regime and the bytes its size
+        gate counted (None when it has no gate); both go to the record
+        with the node's wall seconds."""
         order = self._topo_order()
         waiting = {t.name: {d for d in t.deps if d in self.tables} for t in order}
         dependents: dict[str, list[TableDef]] = {t.name: [] for t in order}
@@ -132,29 +204,49 @@ class Pipeline:
             for d in waiting[t.name]:
                 dependents[d].append(t)
         os.makedirs(self.out_dir, exist_ok=True)
+        record_path = os.path.join(self.out_dir, "_nodes.json")
+        try:
+            with open(record_path) as f:
+                record = json.load(f)
+        except FileNotFoundError:
+            record = {}
+        pos = {t.name: i for i, t in enumerate(order)}
+        rank: dict[str, float] = {}
+        for t in reversed(order):
+            below = max((rank[c.name] for c in dependents[t.name]), default=0.0)
+            rank[t.name] = record.get(t.name, {}).get("seconds", 1.0) + below
+
+        def timed(t: TableDef) -> dict:
+            start = time.perf_counter()
+            regime, counted = refresh(t)
+            return {"seconds": time.perf_counter() - start, "regime": regime, "bytes": counted}
+
+        ready = [t for t in order if not waiting[t.name]]
         running: dict[Future, TableDef] = {}
         error: BaseException | None = None
         width = self.spark.sparkContext.defaultParallelism
         with ThreadPoolExecutor(width, thread_name_prefix="pipeline") as pool:
-
-            def submit(t: TableDef) -> None:
-                running[pool.submit(inheritable_thread_target(self.spark)(refresh), t)] = t
-
-            for t in order:
-                if not waiting[t.name]:
-                    submit(t)
-            while running:
+            while running or (ready and error is None):
+                while ready and error is None and len(running) < width:
+                    t = max(ready, key=lambda r: (rank[r.name], -pos[r.name]))
+                    ready.remove(t)
+                    running[pool.submit(inheritable_thread_target(self.spark)(timed), t)] = t
                 done, _ = wait(running, return_when=FIRST_COMPLETED)
-                finished = [running.pop(f) for f in done]
-                failures = (f.exception() for f in done if f.exception() is not None)
-                error = error or next(failures, None)
-                if error is not None:
-                    continue
-                for t in finished:
+                for f in done:
+                    t = running.pop(f)
+                    if f.exception() is not None:
+                        error = error or f.exception()
+                        continue
+                    record[t.name] = f.result()
                     for c in dependents[t.name]:
                         waiting[c.name].discard(t.name)
                         if not waiting[c.name]:
-                            submit(c)
+                            ready.append(c)
+        tmp = os.path.join(self.out_dir, "._nodes.json.tmp")
+        with open(tmp, "w") as f:
+            kept = {k: v for k, v in record.items() if k in self.tables}
+            json.dump(kept, f, indent=1, sort_keys=True)
+        os.replace(tmp, record_path)
         if error is not None:
             raise error
 
@@ -192,7 +284,7 @@ class Pipeline:
         """
         built: dict[str, DataFrame] = dict(sources)
 
-        def refresh(t: TableDef) -> None:
+        def refresh(t: TableDef) -> tuple[str, None]:
             inputs = {d: built[d] for d in t.deps}
             df = t.build(self.spark, inputs)
             if t.apply is not None:
@@ -205,6 +297,7 @@ class Pipeline:
             else:
                 self._overwrite(t, df)
             built[t.name] = self.read(t.name)
+            return "compiled", None
 
         self._run_dag(refresh)
 
@@ -224,9 +317,13 @@ class Pipeline:
         stream or batch frame. `stream_root` names the ONE dep treated as
         the streaming fact side per table (default: first dep that is a
         stream source); remaining deps are read as static parquet.
+        A node without a stream source runs interpreted when its inputs
+        are smaller than the broadcast threshold (module docstring).
         """
+        bound = parse_size_bytes(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+        interpreted = _interpreted_session(self.spark) if bound > 0 else None
 
-        def refresh(t: TableDef) -> None:
+        def refresh(t: TableDef) -> tuple[str, int | None]:
             # the caller's explicit fact side wins (r13 review: the
             # parameter was documented but never consulted, so the first
             # stream-capable dep silently became the checkpointed stream)
@@ -242,29 +339,36 @@ class Pipeline:
                     if d in stream_sources:
                         root = d
                         break
+            path = self.path(t.name)
+            _recover(path)  # a parked table is live again before it is sized or read
+            spark, regime, counted = self.spark, "streamed", None
+            if root is None:
+                inputs_dirs = [self.path(d) for d in t.deps] + ([path] if t.apply else [])
+                counted = _bytes_until(inputs_dirs, bound)
+                small = counted < bound
+                spark = interpreted if small else self.spark
+                regime = "interpreted" if small else "compiled"
             inputs: dict[str, DataFrame] = {}
             for d in t.deps:
                 if d == root:
-                    inputs[d] = stream_sources[d](self.spark, True)
+                    inputs[d] = stream_sources[d](spark, True)
                 elif d in stream_sources:
-                    inputs[d] = stream_sources[d](self.spark, False)
+                    inputs[d] = stream_sources[d](spark, False)
                 else:
-                    inputs[d] = self.read(d)
-            df = t.build(self.spark, inputs)
-            path = self.path(t.name)
+                    inputs[d] = read_table(spark, self.path(d))
+            df = t.build(spark, inputs)
             ckpt = os.path.join(checkpoint_dir, t.name)
-            _recover(path)  # a parked table is live again before its record is read
             prior = read_schema(path)
             if not df.isStreaming:
                 # No streamable dep: batch rebuild (stateful nodes still go
                 # through their apply fn — SCD state must fold, not be
                 # replaced by the raw change feed).
                 if t.apply is not None:
-                    t.apply(self.spark, df, path)
+                    t.apply(spark, df, path)
                 else:
                     self._overwrite(t, df, prior)
             elif t.apply is not None:
-                apply_fn, spark = t.apply, self.spark
+                apply_fn = t.apply
 
                 def _fb(batch_df: DataFrame, _bid: int, _a=apply_fn, _s=spark, _p=path):
                     _a(_s, batch_df, _p)
@@ -277,6 +381,11 @@ class Pipeline:
                 )
                 q.awaitTermination()
             else:
+                # The widened record goes in before the sink can commit: a
+                # crash after the commit must not leave a column the build
+                # added unreadable. `_recover` has run, so no parked copy
+                # of the table is left for an early record to hide.
+                record_schema(path, merge_schemas(prior, df.schema) if prior else df.schema)
                 writer = (
                     df.writeStream.format("parquet")
                     .option("path", path)
@@ -287,7 +396,7 @@ class Pipeline:
                     writer = writer.partitionBy(t.partition_by)
                 q = writer.start()
                 q.awaitTermination()
-            # T8, recorded only after the write: the record only widens. It
+            # T8, recorded again after the write: the record only widens. It
             # is the union of the record before the write, the record the
             # write left (an apply's own columns, such as SCD2 history) and
             # the build's schema: a column added mid-stream joins it, and
@@ -295,5 +404,6 @@ class Pipeline:
             # (drift-as-nulls, never a drop).
             known = [s for s in (prior, read_schema(path), df.schema) if s is not None]
             record_schema(path, reduce(merge_schemas, known))
+            return regime, counted
 
         self._run_dag(refresh)

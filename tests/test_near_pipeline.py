@@ -295,6 +295,17 @@ def test_incremental_matches_batch(spark, raw_dir, pipe, tmp_path_factory):
     # published public_lakehouse tables: the insert-only MERGE fold over
     # two drains equals the single-shot batch publish (everything except
     # the publish stamp, which legitimately differs per run)
+    # the incremental side built its batch nodes interpreted and the
+    # batch side compiled, so the comparisons below cover both regimes
+    def regimes(p):
+        with open(os.path.join(p.out_dir, "_nodes.json")) as fh:
+            return {n: r["regime"] for n, r in json.load(fh).items()}
+
+    assert set(regimes(pipe).values()) == {"compiled"}
+    inc = regimes(p2)
+    assert inc["silver_blocks"] == "streamed"
+    assert inc["silver_accounts"] == inc["public_actions"] == "interpreted"
+
     def content(p, table, drop=("_processed_time",)):
         df = p.read(table).drop(*drop)
         cols = sorted(df.columns)

@@ -182,3 +182,138 @@ def test_missing_out_dir_is_created(spark, tmp_path, mode):
 
     _refresh(pipe, mode, tmp_path)
     assert _keys(pipe, "t") == ROWS
+
+
+def _chain(pipe: Pipeline, seen: dict) -> None:
+    """`src` -> `a` (streamed in incremental mode) -> `b` (batch): each
+    build records the session it was given."""
+
+    @pipe.table("a", ["src"], partition_by=None)
+    def _a(s, i):
+        seen["a"] = s
+        return i["src"]
+
+    @pipe.table("b", ["a"], partition_by=None)
+    def _b(s, i):
+        seen["b"] = s
+        return i["a"].withColumn("sq", i["a"].k * i["a"].k).orderBy("k")
+
+
+def _record(pipe: Pipeline) -> dict:
+    with open(os.path.join(pipe.out_dir, "_nodes.json")) as fh:
+        return json.load(fh)
+
+
+def test_small_batch_node_runs_interpreted(spark, tmp_path):
+    """A small batch node builds in an interpreted session; a streamed
+    node keeps the caller's; with broadcast off every node keeps the
+    caller's session. Both regimes leave the same tables."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    seen: dict = {}
+    small = Pipeline(spark, str(tmp_path / "small" / "out"))
+    _chain(small, seen)
+    _refresh(small, "incremental", tmp_path / "small")
+    assert seen["a"] is spark
+    assert seen["b"].conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
+    assert seen["b"].conf.get("spark.sql.codegen.wholeStage") == "false"
+    record = _record(small)
+    assert {n: r["regime"] for n, r in record.items()} == {"a": "streamed", "b": "interpreted"}
+    assert record["a"]["bytes"] is None and 0 < record["b"]["bytes"] < 10 * 1024**2
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        seen.clear()
+        compiled = Pipeline(spark, str(tmp_path / "compiled" / "out"))
+        _chain(compiled, seen)
+        _refresh(compiled, "incremental", tmp_path / "compiled")
+    finally:
+        spark.conf.set(key, prev)
+    assert seen["a"] is spark and seen["b"] is spark
+    assert {n: r["regime"] for n, r in _record(compiled).items()} == {
+        "a": "streamed",
+        "b": "compiled",
+    }
+    for name in ("a", "b"):
+        assert sorted(small.read(name).collect()) == sorted(compiled.read(name).collect())
+
+
+def test_interpreted_session_keeps_runtime_confs(spark, tmp_path):
+    """`newSession()` alone drops confs set at runtime: the interpreted
+    session must see the caller's session timezone."""
+    key = "spark.sql.session.timeZone"
+    seen: dict = {}
+    pipe = Pipeline(spark, str(tmp_path / "out"))
+    _chain(pipe, seen)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        _refresh(pipe, "incremental", tmp_path)
+    finally:
+        spark.conf.set(key, prev)
+    assert seen["b"] is not spark
+    assert seen["b"].conf.get(key) == "America/New_York"
+
+
+def test_longest_recorded_chain_starts_first(spark, tmp_path):
+    """More ready leaves than threads: the head of the longest recorded
+    chain is in the first batch of submissions although it is defined
+    last. No build proceeds until the first batch has started, so the
+    first `width` starts are exactly that batch."""
+    width = spark.sparkContext.defaultParallelism
+    pipe = Pipeline(spark, str(tmp_path / "out"))
+    leaves = [f"leaf{i}" for i in range(width + 2)]
+    chain = {"head": ["src"], "mid": ["head"], "tail": ["mid"]}
+    lock, go = threading.Lock(), threading.Event()
+    started: list[str] = []
+
+    for name, deps in [*((n, ["src"]) for n in leaves), *chain.items()]:
+
+        @pipe.table(name, deps, partition_by=None)
+        def _node(s, i, _name=name, _deps=deps):
+            with lock:
+                started.append(_name)
+                if len(started) >= width:
+                    go.set()
+            assert go.wait(30)
+            return i[_deps[0]]
+
+    os.makedirs(pipe.out_dir)
+    weights = {**{n: 0.01 for n in leaves}, **{n: 5.0 for n in chain}}
+    with open(os.path.join(pipe.out_dir, "_nodes.json"), "w") as fh:
+        json.dump({n: {"seconds": w} for n, w in weights.items()}, fh)
+    _refresh(pipe, "batch", tmp_path)
+    assert "head" in started[:width]
+    assert sorted(started) == sorted(weights)
+
+
+def test_node_record_is_replaced_whole(spark, tmp_path, monkeypatch):
+    """`_nodes.json` holds one entry per node after a run, and a run that
+    dies at the record's rename leaves the previous record intact: it is
+    never written in place."""
+    from near_public_lakehouse_spark.streaming import runner
+
+    pipe = Pipeline(spark, str(tmp_path / "out"))
+    _chain(pipe, {})
+    _refresh(pipe, "incremental", tmp_path)
+    record_path = os.path.join(pipe.out_dir, "_nodes.json")
+    with open(record_path) as fh:
+        before = fh.read()
+    assert set(json.loads(before)) == {"a", "b"}
+    assert all(r["seconds"] > 0 for r in json.loads(before).values())
+
+    replace = runner.os.replace
+
+    def crash_on_record(src, dst):
+        if dst == record_path:
+            raise OSError("crash at the record's rename")
+        replace(src, dst)
+
+    monkeypatch.setattr(runner.os, "replace", crash_on_record)
+    with pytest.raises(OSError, match="record's rename"):
+        pipe.run_incremental(
+            {"src": lambda s, streaming: s.createDataFrame([(9,)], SCHEMA)},
+            str(tmp_path / "ckpt"),
+        )
+    with open(record_path) as fh:
+        assert fh.read() == before

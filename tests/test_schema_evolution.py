@@ -328,6 +328,47 @@ def test_runner_incremental_overwrite_installs_union_with_data(spark, tmp_path, 
     assert [tuple(r) for r in pipe.read("t").collect()] == [(2, "b", None)]
 
 
+def test_runner_stream_sink_records_added_column_before_commit(spark, tmp_path, monkeypatch):
+    """A file-sink node whose second wave adds a column: a crash after
+    the sink commits, at the runner's post-write record, still leaves the
+    column readable, because the widened record went in before the
+    stream started."""
+    from near_public_lakehouse_spark.streaming import runner
+
+    land, out, ckpt = (str(tmp_path / n) for n in ("land", "out", "ckpt"))
+    os.makedirs(land)
+    declared = _s(("event_id", LongType()), ("value", DoubleType()))
+    pipe = runner.Pipeline(spark, out)
+
+    @pipe.table("events", deps=["raw"], partition_by=None)
+    def _events(s, inputs):
+        return inputs["raw"]
+
+    def src(s, streaming):
+        return read_json_evolving(s, land, declared, streaming=streaming)
+
+    def land_file(name, row):
+        with open(os.path.join(land, name), "w") as fh:
+            fh.write(json.dumps(row) + "\n")
+
+    land_file("b0.json", {"event_id": 0, "value": 0.0})
+    pipe.run_incremental({"raw": src}, ckpt)
+    land_file("b1.json", {"event_id": 1, "value": 1.0, "fee": 0.5})
+    record = runner.record_schema
+    committed = os.path.join(pipe.path("events"), "_spark_metadata", "1")
+
+    def crash_after_commit(path, schema):
+        if path == pipe.path("events") and os.path.exists(committed):
+            raise RuntimeError("crash after the sink's commit")
+        record(path, schema)
+
+    monkeypatch.setattr(runner, "record_schema", crash_after_commit)
+    with pytest.raises(RuntimeError, match="crash after"):
+        pipe.run_incremental({"raw": src}, ckpt)
+    got = {r.event_id: r.fee for r in pipe.read("events").collect()}
+    assert got == {0: None, 1: pytest.approx(0.5)}
+
+
 def test_runner_incremental_keeps_columns_the_apply_adds(spark, tmp_path):
     """An apply node whose table carries columns its feed does not (SCD2
     history) keeps them in the record: the next wave's apply reads its
