@@ -29,12 +29,13 @@ then passes the driver's 6 dp float canonicalization with margin.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from near_public_lakehouse_spark.functions.frames import inline_rows_df
 from near_public_lakehouse_spark.queries.registry import query
-from near_public_lakehouse_spark.session import parse_size_bytes
 from near_public_lakehouse_spark.sources.tables import load_table
 
 PR_DAMPING = 0.85
@@ -112,12 +113,32 @@ def _state_name_bytes(nodes: DataFrame, col: str = "node"):
         return F.coalesce(F.sum(F.length(col)), F.lit(0))
     return F.count(F.lit(1)) * 8
 
+_SIZE_RE = re.compile(r"^(-?\d+)\s*([kmgtp]?i?b?)$")
+_SIZE_UNIT = {
+    "": 1,
+    "b": 1,
+    **{
+        p + s: 1024 ** e
+        for e, p in enumerate("kmgtp", start=1)
+        for s in ("", "b", "ib")
+    },
+}
+
+
+def _parse_size_bytes(raw: str) -> int:
+    """Spark size-string -> bytes ('10MB', '10m', '10485760', '-1')."""
+    m = _SIZE_RE.match(str(raw).strip().lower())
+    unit = _SIZE_UNIT.get(m.group(2)) if m else None
+    if unit is None:
+        return -1  # unparseable: treat as broadcast-disabled (safe regime)
+    return int(m.group(1)) * unit
+
 
 def _state_broadcastable(spark: SparkSession, rows: int, name_bytes: int) -> bool:
     """One-line regime pick: does an O(rows) state frame (node name +
     8-byte score) fit the session's broadcast threshold? `rows`/`name_bytes`
     come from the caller's existing driver aggregate — no extra job."""
-    thr = parse_size_bytes(
+    thr = _parse_size_bytes(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     )
     return thr > 0 and name_bytes + rows * STATE_ROW_OVERHEAD <= thr

@@ -22,7 +22,6 @@ works on a session we did not build (the correctness driver owns its own).
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import SparkSession
 
@@ -53,27 +52,6 @@ RUNTIME_CONF: dict[str, str] = {
     # oracle (r15 differential fuzz finding, NULL-text class).
     "spark.sql.legacy.sizeOfNull": "false",
 }
-
-
-_SIZE_RE = re.compile(r"^(-?\d+)\s*([kmgtp]?i?b?)$")
-_SIZE_UNIT = {
-    "": 1,
-    "b": 1,
-    **{
-        p + s: 1024 ** e
-        for e, p in enumerate("kmgtp", start=1)
-        for s in ("", "b", "ib")
-    },
-}
-
-
-def parse_size_bytes(raw: str) -> int:
-    """Spark size-string -> bytes ('10MB', '10m', '10485760', '-1')."""
-    m = _SIZE_RE.match(str(raw).strip().lower())
-    unit = _SIZE_UNIT.get(m.group(2)) if m else None
-    if unit is None:
-        return -1  # unparseable: treat as broadcast-disabled (safe regime)
-    return int(m.group(1)) * unit
 
 
 def configure_runtime(spark: SparkSession) -> SparkSession:

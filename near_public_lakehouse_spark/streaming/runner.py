@@ -5,22 +5,18 @@ needs, item (a)).
 Each node declares (name, deps, build_fn); the runner materializes each
 table to parquet partitioned by `block_date`. Both modes share one
 ready-set scheduler, `Pipeline._run_dag`, the way a DLT update runs flows
-that do not depend on each other at the same time: a node becomes ready
-once every in-pipeline dep has finished, and independent nodes plan,
-launch jobs, stream and commit concurrently on one SparkContext. The
-driver thread pool is as wide as the context's task slots
-(`defaultParallelism`), and a ready node is handed to it only when a
-thread is free: critical path first, the ready node with the largest
-upward rank (HEFT's list-scheduling rank: the node's seconds plus the
-largest rank among its dependents). The seconds are the previous run's,
-from `<out_dir>/_nodes.json`, which every run replaces in one rename; it
-holds each node's wall seconds, regime and the bytes its size gate
-counted, and a node with no record weighs 1 s. Jobs share Spark's
-default FIFO scheduler, and every node inherits the caller's local
+that do not depend on each other at the same time: a node is handed to a
+driver thread pool as soon as every in-pipeline dep has finished, so
+independent nodes plan, launch jobs, stream and commit concurrently on one
+SparkContext. The pool is as wide as the context's task slots
+(`defaultParallelism`); the ready set caps it in practice. Jobs share
+Spark's default FIFO scheduler, and every node inherits the caller's local
 properties (job group, description), so `cancelJobGroup` reaches all of
-them. On the first node failure no further node starts; the nodes
-already running drain (each awaits its own query), and that first error
-is re-raised.
+them. On the first node failure no further node starts; the nodes already
+running drain (each awaits its own query), and that first error is
+re-raised. Every run replaces `<out_dir>/_nodes.json` in one rename: each
+finished node's wall seconds, regime and the bytes its size gate counted.
+It is there to be read after a run; the runner never reads it.
 
 In incremental mode the fact-side bronze source is a Structured Streaming
 file/parquet stream with `trigger(availableNow=True)` and a checkpoint —
@@ -32,15 +28,14 @@ shard node starts only after `silver_blocks` has finished).
 Incremental nodes run in one of three regimes. A node with a stream
 source is `streamed`, in the caller's session: its micro-batch size is
 unknown until the trigger runs. A batch node whose inputs (its deps'
-table dirs, plus its own dir for an `apply` node) hold fewer bytes than
-`spark.sql.autoBroadcastJoinThreshold` is `interpreted`: it reads,
-builds and writes in a session that interprets expressions instead of
-generating and compiling code for them, because at a few hundred rows
-the Janino compile costs more than the query. A threshold of -1
-(broadcast off) makes no node small, and larger nodes stay `compiled`,
-in the caller's session. `run_batch` keeps the caller's session for
-every node: its source frames are bound to it, and a full refresh reads
-all of history.
+table dirs, plus its own dir for an `apply` node) hold fewer than
+`_INTERPRET_BELOW` bytes (1 MiB, the measured crossover) is
+`interpreted`: it reads, builds and writes in a session that interprets
+expressions instead of generating and compiling code for them, because
+at a few hundred rows the Janino compile costs more than the query.
+Larger nodes stay `compiled`, in the caller's session. `run_batch` keeps the caller's session for every node:
+its source frames are bound to it, and a full refresh reads all of
+history.
 
 Stateful nodes (an `apply` fn: the SCD1 APPLY CHANGES tables and the
 insert-only publish tables) all fold through the one keyed-MERGE core,
@@ -79,7 +74,6 @@ from near_public_lakehouse_spark.operators.merge import (
     record_schema,
     write_table,
 )
-from near_public_lakehouse_spark.session import parse_size_bytes
 from near_public_lakehouse_spark.streaming.evolution import merge_schemas
 
 # Confs of the session small batch nodes run in: no whole-stage codegen,
@@ -90,6 +84,12 @@ _INTERPRETED_CONF = {
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
 }
+# An incremental batch node runs interpreted while its inputs hold fewer
+# bytes than this. Measured on 4 vCPU, one filter/derive/group-by node
+# in a warm JVM with a new plan per run: interpreted 8-10% faster at
+# 0.1-0.2 MB, even at 0.6-1.2 MB, 7% slower at 2.4 MB and more above.
+# A medallion wave's nodes read under 0.4 MB each.
+_INTERPRET_BELOW = 1024 * 1024
 
 
 def _interpreted_session(spark: SparkSession) -> SparkSession:
@@ -185,18 +185,17 @@ class Pipeline:
         return read_table(self.spark, self.path(name))
 
     def _run_dag(self, refresh: Callable[[TableDef], tuple[str, int | None]]) -> None:
-        """Run `refresh(t)` for every node once all of its in-pipeline
-        deps have finished, on `defaultParallelism` driver threads. A
-        ready node is submitted only when a thread is free, largest
-        upward rank first (ties in topological order), weighted by the
-        previous run's `_nodes.json`. Each call inherits the caller's
-        local properties as they are when the node is submitted. On the
-        first failure no further node starts; the running ones drain,
-        the record is replaced, then that error is raised.
+        """Run `refresh(t)` for every node, each as soon as all of its
+        in-pipeline deps have finished, on `defaultParallelism` driver
+        threads. Each call inherits the caller's local properties as they
+        are when the node is submitted. On the first failure no further
+        node starts; the running ones drain, the record is replaced, then
+        that error is raised.
 
         `refresh(t)` returns the node's regime and the bytes its size
-        gate counted (None when it has no gate); both go to the record
-        with the node's wall seconds."""
+        gate counted (None when it has no gate); `<out_dir>/_nodes.json`
+        gets both, with the wall seconds of every node that finished. The
+        runner never reads the record back."""
         order = self._topo_order()
         waiting = {t.name: {d for d in t.deps if d in self.tables} for t in order}
         dependents: dict[str, list[TableDef]] = {t.name: [] for t in order}
@@ -204,49 +203,41 @@ class Pipeline:
             for d in waiting[t.name]:
                 dependents[d].append(t)
         os.makedirs(self.out_dir, exist_ok=True)
-        record_path = os.path.join(self.out_dir, "_nodes.json")
-        try:
-            with open(record_path) as f:
-                record = json.load(f)
-        except FileNotFoundError:
-            record = {}
-        pos = {t.name: i for i, t in enumerate(order)}
-        rank: dict[str, float] = {}
-        for t in reversed(order):
-            below = max((rank[c.name] for c in dependents[t.name]), default=0.0)
-            rank[t.name] = record.get(t.name, {}).get("seconds", 1.0) + below
 
-        def timed(t: TableDef) -> dict:
+        record: dict[str, dict] = {}
+
+        def timed(t: TableDef) -> None:
             start = time.perf_counter()
             regime, counted = refresh(t)
-            return {"seconds": time.perf_counter() - start, "regime": regime, "bytes": counted}
+            record[t.name] = {"seconds": time.perf_counter() - start, "regime": regime, "bytes": counted}
 
-        ready = [t for t in order if not waiting[t.name]]
         running: dict[Future, TableDef] = {}
         error: BaseException | None = None
         width = self.spark.sparkContext.defaultParallelism
         with ThreadPoolExecutor(width, thread_name_prefix="pipeline") as pool:
-            while running or (ready and error is None):
-                while ready and error is None and len(running) < width:
-                    t = max(ready, key=lambda r: (rank[r.name], -pos[r.name]))
-                    ready.remove(t)
-                    running[pool.submit(inheritable_thread_target(self.spark)(timed), t)] = t
+
+            def submit(t: TableDef) -> None:
+                running[pool.submit(inheritable_thread_target(self.spark)(timed), t)] = t
+
+            for t in order:
+                if not waiting[t.name]:
+                    submit(t)
+            while running:
                 done, _ = wait(running, return_when=FIRST_COMPLETED)
-                for f in done:
-                    t = running.pop(f)
-                    if f.exception() is not None:
-                        error = error or f.exception()
-                        continue
-                    record[t.name] = f.result()
+                finished = [running.pop(f) for f in done]
+                failures = (f.exception() for f in done if f.exception() is not None)
+                error = error or next(failures, None)
+                if error is not None:
+                    continue
+                for t in finished:
                     for c in dependents[t.name]:
                         waiting[c.name].discard(t.name)
                         if not waiting[c.name]:
-                            ready.append(c)
+                            submit(c)
         tmp = os.path.join(self.out_dir, "._nodes.json.tmp")
         with open(tmp, "w") as f:
-            kept = {k: v for k, v in record.items() if k in self.tables}
-            json.dump(kept, f, indent=1, sort_keys=True)
-        os.replace(tmp, record_path)
+            json.dump(record, f, indent=1, sort_keys=True)
+        os.replace(tmp, os.path.join(self.out_dir, "_nodes.json"))
         if error is not None:
             raise error
 
@@ -318,9 +309,9 @@ class Pipeline:
         the streaming fact side per table (default: first dep that is a
         stream source); remaining deps are read as static parquet.
         A node without a stream source runs interpreted when its inputs
-        are smaller than the broadcast threshold (module docstring).
+        hold fewer than `_INTERPRET_BELOW` bytes (module docstring).
         """
-        bound = parse_size_bytes(self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+        bound = _INTERPRET_BELOW
         interpreted = _interpreted_session(self.spark) if bound > 0 else None
 
         def refresh(t: TableDef) -> tuple[str, int | None]:

@@ -225,16 +225,16 @@ def test_bfs_and_hits_outputs_plan_independent_under_skew(spark):
 def test_state_broadcastable_threshold_math(spark):
     from near_public_lakehouse_spark.queries.graph import (
         STATE_ROW_OVERHEAD,
+        _parse_size_bytes,
         _state_broadcastable,
     )
-    from near_public_lakehouse_spark.session import parse_size_bytes
 
-    assert parse_size_bytes("10MB") == 10 * 1024**2
-    assert parse_size_bytes("10m") == 10 * 1024**2
-    assert parse_size_bytes("10485760") == 10 * 1024**2
-    assert parse_size_bytes("64KB") == 64 * 1024
-    assert parse_size_bytes("-1") == -1
-    assert parse_size_bytes("garbage") == -1
+    assert _parse_size_bytes("10MB") == 10 * 1024**2
+    assert _parse_size_bytes("10m") == 10 * 1024**2
+    assert _parse_size_bytes("10485760") == 10 * 1024**2
+    assert _parse_size_bytes("64KB") == 64 * 1024
+    assert _parse_size_bytes("-1") == -1
+    assert _parse_size_bytes("garbage") == -1
 
     prev = _with_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "10MB"})
     try:
