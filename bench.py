@@ -23,7 +23,6 @@ collected to the driver) — the honest analog of writing results out.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import re
@@ -37,83 +36,24 @@ if _REPO not in sys.path:
 
 from near_public_lakehouse_spark.queries import all_queries  # noqa: E402
 from near_public_lakehouse_spark.session import get_spark  # noqa: E402
+from tools.probe_common import (  # noqa: E402
+    cpu_times,
+    diff_stages,
+    release_session_state,
+    stage_snapshot,
+)
 
 
-def _cpu_snapshot() -> tuple[int, int] | None:
-    """(steal_ticks, system_ticks) from /proc/stat — the r15 contention
-    root-cause evidence: during flagged outlier runs the guest measured
+def _steal_sys_s(before: dict | None, after: dict | None) -> list[float] | None:
+    """[steal_s, sys_s] between two host CPU reads: the r15 contention
+    root-cause evidence. During flagged outlier runs the guest measured
     ~220 s of STEAL and sys time exploding 32 -> 380 s (host co-tenant
     memory/CPU pressure) while user time stayed flat, proving the spread
     is environmental, not a plan change. Recording both per run makes the
     next anomaly adjudicable from the committed record alone."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = list(map(int, parts[1:]))
-        return vals[7], vals[2]
-    except Exception:
+    if not (before and after):
         return None
-
-
-def _stage_snapshot(spark) -> dict[int, dict]:
-    """stageId -> metrics from the UI REST API. Stage-level evidence makes
-    the next environmental bench anomaly diagnosable from data (shuffle
-    bytes / task time don't lie about machine contention) instead of
-    re-run arbitration — VERDICT r8 task #6. Returns {} when the UI is
-    unavailable; the bench JSON contract is unchanged either way."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return {}
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages", timeout=5
-        ) as resp:
-            stages = json.loads(resp.read())
-    except Exception:
-        return {}
-    out: dict[int, dict] = {}
-    for st in stages:
-        out[st["stageId"]] = {
-            "task_time_ms": st.get("executorRunTime", 0),
-            "shuffle_read_bytes": st.get("shuffleReadBytes", 0),
-            "shuffle_write_bytes": st.get("shuffleWriteBytes", 0),
-            "input_bytes": st.get("inputBytes", 0),
-            "n_tasks": st.get("numTasks", 0),
-        }
-    return out
-
-
-def _diff_stages(before: dict[int, dict], after: dict[int, dict]) -> dict:
-    new = [after[sid] for sid in after.keys() - before.keys()]
-    return {
-        "n_stages": len(new),
-        "task_time_ms": sum(s["task_time_ms"] for s in new),
-        "shuffle_read_mb": round(sum(s["shuffle_read_bytes"] for s in new) / 2**20, 2),
-        "shuffle_write_mb": round(sum(s["shuffle_write_bytes"] for s in new) / 2**20, 2),
-        "input_mb": round(sum(s["input_bytes"] for s in new) / 2**20, 2),
-        "n_tasks": sum(s["n_tasks"] for s in new),
-    }
-
-
-def _release_session_state(spark) -> None:
-    """Drop accumulated localCheckpoint blocks between timed runs — the
-    round-6 profiling finding applied to the bench (ROADMAP round-12
-    candidate #4): checkpointed RDD blocks from earlier queries' iterative
-    state (graph trio, CC rounds, near-dup stages) are only reclaimed when
-    driver-side GC lets the ContextCleaner see them, and a 128 GiB JVM
-    heap GCs rarely — so later queries in the round-robin inherit block-
-    manager pressure and read 1.5x slower than a dedicated session
-    (near_dup 20.5 s in-suite vs 13.7 s isolated, BENCH_LOCAL_r11 vs the
-    r11 head-to-head). Both GCs run OUTSIDE the timed window; this is the
-    fresh-session analog, not a measurement change."""
-    gc.collect()
-    try:
-        spark.sparkContext._jvm.System.gc()
-    except Exception:
-        pass  # metrics-only nicety; the timing contract stands without it
+    return [round(after[k] - before[k], 1) for k in ("steal", "system")]
 
 
 def main() -> None:
@@ -147,26 +87,22 @@ def main() -> None:
     # instead of all landing in the same thermal/JIT state back to back.
     for run_i in range(n_runs):
         for name, q in queries.items():
-            before = _stage_snapshot(spark) if run_i == n_runs - 1 else {}
-            cpu0 = _cpu_snapshot()
+            before = stage_snapshot(spark) if run_i == n_runs - 1 else {}
+            cpu0 = cpu_times()
             t0 = time.perf_counter()
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.setdefault(name, []).append(
                 round(time.perf_counter() - t0, 3)
             )
-            cpu1 = _cpu_snapshot()
-            if cpu0 and cpu1:
-                host_cpu.setdefault(name, []).append(
-                    [round((cpu1[0] - cpu0[0]) / 100.0, 1),
-                     round((cpu1[1] - cpu0[1]) / 100.0, 1)]
-                )
+            if host := _steal_sys_s(cpu0, cpu_times()):
+                host_cpu.setdefault(name, []).append(host)
             if run_i == n_runs - 1:
                 # Stage metrics from the LAST (warmest) run of each query:
                 # new stage ids since the pre-run snapshot are this run's.
-                after = _stage_snapshot(spark)
+                after = stage_snapshot(spark)
                 if after:
-                    stage_metrics[name] = _diff_stages(before, after)
-            _release_session_state(spark)
+                    stage_metrics[name] = diff_stages(before, after)
+            release_session_state(spark)
 
     # Contention self-diagnosis (VERDICT r10 task #3): a max/min spread
     # over 3x within one query's repeats is the cold-start/contention
@@ -180,17 +116,13 @@ def main() -> None:
         if min(xs) > 0 and max(xs) / min(xs) > 3.0
     )
     for name in flagged:
-        _release_session_state(spark)
-        cpu0 = _cpu_snapshot()
+        release_session_state(spark)
+        cpu0 = cpu_times()
         t0 = time.perf_counter()
         queries[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         runs[name].append(round(time.perf_counter() - t0, 3))
-        cpu1 = _cpu_snapshot()
-        if cpu0 and cpu1:
-            host_cpu.setdefault(name, []).append(
-                [round((cpu1[0] - cpu0[0]) / 100.0, 1),
-                 round((cpu1[1] - cpu0[1]) / 100.0, 1)]
-            )
+        if host := _steal_sys_s(cpu0, cpu_times()):
+            host_cpu.setdefault(name, []).append(host)
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -239,7 +171,7 @@ def main() -> None:
             "contended": contended,
             "spread": {n: [min(xs), max(xs)] for n, xs in runs.items()},
             "runs": runs,
-            # per-run [steal_s, sys_s] from /proc/stat: host co-tenant
+            # per-run [steal_s, sys_s] of the host CPU: host co-tenant
             # pressure evidence (r15 — steal ~220 s / sys 32->380 s
             # during outlier runs with user time flat)
             "host_steal_sys_s": host_cpu,

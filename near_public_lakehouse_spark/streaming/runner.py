@@ -296,7 +296,6 @@ class Pipeline:
         self,
         stream_sources: dict[str, Callable[[SparkSession, bool], DataFrame]],
         checkpoint_dir: str,
-        stream_root: str | None = None,
     ) -> None:
         """Incremental refresh: tables whose root source supports streaming
         run as availableNow streams; the rest rebuild in batch. A node
@@ -305,9 +304,9 @@ class Pipeline:
         stream-static join always reads a complete static side.
 
         `stream_sources[name](spark, streaming)` returns the source as a
-        stream or batch frame. `stream_root` names the ONE dep treated as
-        the streaming fact side per table (default: first dep that is a
-        stream source); remaining deps are read as static parquet.
+        stream or batch frame. A node's streaming fact side is its first
+        dep (in `deps` order) that is a stream source; every other dep,
+        stream source or not, is read as a static batch frame.
         A node without a stream source runs interpreted when its inputs
         hold fewer than `_INTERPRET_BELOW` bytes (module docstring).
         """
@@ -315,21 +314,7 @@ class Pipeline:
         interpreted = _interpreted_session(self.spark) if bound > 0 else None
 
         def refresh(t: TableDef) -> tuple[str, int | None]:
-            # the caller's explicit fact side wins (r13 review: the
-            # parameter was documented but never consulted, so the first
-            # stream-capable dep silently became the checkpointed stream)
-            if (
-                stream_root is not None
-                and stream_root in t.deps
-                and stream_root in stream_sources
-            ):
-                root = stream_root
-            else:
-                root = None
-                for d in t.deps:
-                    if d in stream_sources:
-                        root = d
-                        break
+            root = next((d for d in t.deps if d in stream_sources), None)
             path = self.path(t.name)
             _recover(path)  # a parked table is live again before it is sized or read
             spark, regime, counted = self.spark, "streamed", None

@@ -438,39 +438,3 @@ def test_runner_batch_swap_recovers_parked_state(spark, tmp_path):
     rows = [(r.k, r.v) for r in pipe.read("state").collect()]
     assert rows == [(1, "a")]  # rebuilt fresh, recovery didn't crash
     assert not os.path.isdir(parked)
-
-
-def test_runner_stream_root_is_honored(spark, tmp_path):
-    """r13 review: run_incremental's documented stream_root parameter was
-    accepted and ignored — the caller's explicit fact side must be the
-    streaming dep, the other stream-capable dep read as batch."""
-    from near_public_lakehouse_spark.streaming.runner import Pipeline
-
-    land_a, land_b = str(tmp_path / "a"), str(tmp_path / "b")
-    for d, k in ((land_a, 1), (land_b, 2)):
-        os.makedirs(d)
-        with open(os.path.join(d, "f.json"), "w") as fh:
-            fh.write(json.dumps({"k": k}) + "\n")
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    os.makedirs(out)
-    pipe = Pipeline(spark, out)
-    seen: dict[str, bool] = {}
-
-    @pipe.table("t", deps=["a", "b"], partition_by=None)
-    def _t(s, inputs):
-        seen.update({d: inputs[d].isStreaming for d in inputs})
-        return inputs["b"] if inputs["b"].isStreaming else inputs["a"]
-
-    schema = _s(("k", LongType()))
-
-    def mk(path):
-        def src(s, streaming):
-            r = s.readStream if streaming else s.read
-            return r.schema(schema).json(path)
-
-        return src
-
-    pipe.run_incremental(
-        {"a": mk(land_a), "b": mk(land_b)}, ckpt, stream_root="b"
-    )
-    assert seen == {"a": False, "b": True}

@@ -15,10 +15,8 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import json
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -28,13 +26,7 @@ if _REPO not in sys.path:
 from pyspark.sql import functions as F  # noqa: E402
 
 from near_public_lakehouse_spark.session import get_spark  # noqa: E402
-
-
-def _api(spark, path):
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/{path}", timeout=10) as r:
-        return json.loads(r.read())
+from tools.probe_common import diff_stages, stage_snapshot  # noqa: E402
 
 
 def main() -> None:
@@ -110,18 +102,17 @@ def main() -> None:
         G._merge_layout = lay
         for name, fn in jobs:
             for run_i in range(args.runs):
-                st0 = {s["stageId"] for s in _api(spark, "stages")}
+                st0 = stage_snapshot(spark)
                 spark.sparkContext.setJobDescription(f"{name} {mode} run{run_i}")
                 t0 = time.perf_counter()
                 fn()
                 wall = time.perf_counter() - t0
-                new = [s for s in _api(spark, "stages") if s["stageId"] not in st0]
-                shw = sum(s.get("shuffleWriteBytes", 0) for s in new) / 2**20
-                tt = sum(s.get("executorRunTime", 0) for s in new) / 1000.0
+                d = diff_stages(st0, stage_snapshot(spark))
                 print(
                     f"{name:13s} {mode:6s} run{run_i}: wall={wall:7.2f}s "
-                    f"stages={len(new):3d} task_time={tt:7.1f}s "
-                    f"shuffle_write={shw:8.1f}MB",
+                    f"stages={d['n_stages']:3d} "
+                    f"task_time={d['task_time_ms'] / 1000:7.1f}s "
+                    f"shuffle_write={d['shuffle_write_mb']:8.1f}MB",
                     flush=True,
                 )
     G._merge_layout = real_layout

@@ -1,70 +1,126 @@
-"""Shared helpers for the adversarial-skew probe tools
-(skew_probe_dedup.py, skew_probe_graph.py): Spark REST-API stage/task
-scraping for straggler evidence. Extracted r13 — the two probes carried
-verbatim copies and a fix to one would silently miss the other."""
+"""The one measurement helper for bench.py and the tools: Spark UI REST
+reads, /proc/stat reads and the between-run release. Nothing else
+outside perfbench/ opens the status API, parses /proc/stat or asks the
+JVM to GC, so a fix to one of them reaches every caller. It lives in
+tools/ and not in the package because it reaches the JVM through
+`sparkContext._jvm`, which the package must not use."""
 
 from __future__ import annotations
 
+import gc
+import http.client
 import json
+import os
 import urllib.request
 
+_HZ = os.sysconf("SC_CLK_TCK")
+# the aggregate `cpu` line of /proc/stat, in order (proc(5))
+_CPU_FIELDS = (
+    "user", "nice", "system", "idle", "iowait",
+    "irq", "softirq", "steal", "guest", "guest_nice",
+)
 
-def stage_ids(spark) -> set[int]:
+
+def rest(spark, path: str):
+    """GET `/api/v1/applications/<app>/<path>` as parsed JSON; `[]` when
+    the UI is off or the call fails, so a caller without the UI degrades
+    to empty metrics instead of failing (bench.py's contract)."""
     ui = spark.sparkContext.uiWebUrl
+    if not ui:
+        return []
     app = spark.sparkContext.applicationId
     try:
         with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages", timeout=5
+            f"{ui}/api/v1/applications/{app}/{path}", timeout=10
         ) as r:
-            return {s["stageId"] for s in json.loads(r.read())}
-    except Exception:
-        return set()
+            return json.loads(r.read())
+    except (OSError, ValueError, http.client.HTTPException):
+        return []
 
 
-def max_task_ms(spark, before: set[int]) -> tuple[float, float]:
-    """(max single-task ms, total task ms) across stages run since
-    `before` — the straggler evidence: a hot key serialized into one task
-    shows up as max ~= wall regardless of task count."""
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
+def stage_snapshot(spark) -> dict[int, dict]:
+    """stageId -> metrics from the UI REST API. Stage-level evidence makes
+    the next environmental bench anomaly diagnosable from data (shuffle
+    bytes / task time don't lie about machine contention) instead of
+    re-run arbitration. Returns {} when the UI is unavailable."""
+    return {
+        st["stageId"]: {
+            "task_time_ms": st.get("executorRunTime", 0),
+            "cpu_time_ns": st.get("executorCpuTime", 0),
+            "shuffle_read_bytes": st.get("shuffleReadBytes", 0),
+            "shuffle_write_bytes": st.get("shuffleWriteBytes", 0),
+            "input_bytes": st.get("inputBytes", 0),
+            "n_tasks": st.get("numTasks", 0),
+            "name": st.get("name", "?"),
+        }
+        for st in rest(spark, "stages")
+    }
+
+
+def diff_stages(before: dict[int, dict], after: dict[int, dict]) -> dict:
+    """Totals over the stages in `after` whose ids `before` lacks: the
+    stages a run started between the two snapshots."""
+    new = [after[sid] for sid in after.keys() - before.keys()]
+    return {
+        "n_stages": len(new),
+        "task_time_ms": sum(s["task_time_ms"] for s in new),
+        "shuffle_read_mb": round(sum(s["shuffle_read_bytes"] for s in new) / 2**20, 2),
+        "shuffle_write_mb": round(sum(s["shuffle_write_bytes"] for s in new) / 2**20, 2),
+        "input_mb": round(sum(s["input_bytes"] for s in new) / 2**20, 2),
+        "n_tasks": sum(s["n_tasks"] for s in new),
+    }
+
+
+def max_task_ms(spark, before) -> tuple[float, float]:
+    """(max single-task ms, total task ms) across stages run since the
+    stage ids in `before` — the straggler evidence: a hot key serialized
+    into one task shows up as max ~= wall regardless of task count."""
     mx = tot = 0.0
-    try:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages", timeout=5
-        ) as r:
-            stages = json.loads(r.read())
-    except Exception:
-        return (0.0, 0.0)
-    for s in stages:
+    for s in rest(spark, "stages"):
         if s["stageId"] in before or s.get("status") not in ("COMPLETE", "ACTIVE"):
             continue
         tot += s.get("executorRunTime", 0)
-        try:
-            with urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app}/stages/{s['stageId']}/"
-                f"{s.get('attemptId', 0)}/taskSummary?quantiles=1.0",
-                timeout=5,
-            ) as r:
-                summ = json.loads(r.read())
+        summ = rest(
+            spark,
+            f"stages/{s['stageId']}/{s.get('attemptId', 0)}/taskSummary?quantiles=1.0",
+        )
+        if summ:
             mx = max(mx, float(summ.get("executorRunTime", [0.0])[0]))
-        except Exception:
-            pass
     return (mx, tot)
 
 
 def release_session_state(spark) -> None:
-    """Between-measurement hygiene (the profile tool's r6 finding, now
-    shared by the probes): accumulated localCheckpoint RDD blocks and
-    per-round broadcast hash tables are only reclaimed by the
-    ContextCleaner after a GC — without this, consecutive measurements on
-    one session read 2-4x apart on identical code (r14 probe finding)."""
-    import gc
-
+    """Between-run release, outside any timed window: accumulated
+    localCheckpoint RDD blocks and per-round broadcast hash tables are
+    only reclaimed by the ContextCleaner after a driver-side GC, and a
+    large heap GCs rarely. Without it, later runs on one session inherit
+    block-manager pressure: near_dup read 20.5 s in-suite vs 13.7 s
+    isolated (BENCH_LOCAL_r11), and consecutive probe runs on identical
+    code read 2-4x apart."""
     gc.collect()
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:
-        pass
+        pass  # metrics-only nicety; no timing depends on it
+
+
+def cpu_times(path: str = "/proc/stat") -> dict[str, float] | None:
+    """Seconds per field of the aggregate `cpu` line (ticks over
+    SC_CLK_TCK), plus `busy`: everything but idle, iowait, steal, guest
+    and guest_nice. guest/guest_nice are already folded into user/nice,
+    so counting them again double-counts KVM-host guest load; steal is
+    time the hypervisor gave OTHER guests and can never show in this
+    guest's process tree. Fields a kernel lacks are absent. None when
+    the file is unreadable."""
+    try:
+        with open(path) as fh:
+            ticks = [int(x) for x in fh.readline().split()[1:]]
+    except (OSError, ValueError):
+        return None
+    out = {k: v / _HZ for k, v in zip(_CPU_FIELDS, ticks)}
+    idle = ("idle", "iowait", "steal", "guest", "guest_nice")
+    out["busy"] = sum(v for k, v in out.items() if k not in idle)
+    return out
 
 
 def proc_tree_cpu_jiffies(root_pid: int) -> int:
@@ -76,8 +132,6 @@ def proc_tree_cpu_jiffies(root_pid: int) -> int:
     jiffies land in the JVM's cutime and stay in the own-tree sum).
     RUSAGE_CHILDREN alone can't do this: it only covers children of the
     CALLING process, not the JVM's."""
-    import os
-
     info: dict[int, tuple[int, int]] = {}
     for p in os.listdir("/proc"):
         if not p.isdigit():
@@ -87,11 +141,11 @@ def proc_tree_cpu_jiffies(root_pid: int) -> int:
                 s = fh.read()
         except OSError:
             continue  # raced a process exit
-        rest = s[s.rindex(")") + 2 :].split()
+        fields = s[s.rindex(")") + 2 :].split()
         # fields after comm: state ppid ... utime(11) stime(12) cutime(13)
         # cstime(14) — cutime/cstime are reaped-children totals
-        own = int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14])
-        info[int(p)] = (int(rest[1]), own)
+        own = int(fields[11]) + int(fields[12]) + int(fields[13]) + int(fields[14])
+        info[int(p)] = (int(fields[1]), own)
     kids: dict[int, list[int]] = {}
     for pid, (ppid, _) in info.items():
         kids.setdefault(ppid, []).append(pid)
@@ -104,36 +158,14 @@ def proc_tree_cpu_jiffies(root_pid: int) -> int:
     return total
 
 
-def cpu_snapshot() -> tuple[int, int]:
-    """(system busy jiffies, own process-tree jiffies)."""
-    import os
-
-    with open("/proc/stat") as fh:
-        vals = [int(x) for x in fh.readline().split()[1:]]
-    # busy = everything minus idle(3) + iowait(4); guest(8)/guest_nice(9)
-    # are ALREADY folded into user/nice, so subtract them too or KVM-host
-    # guest load double-counts and spuriously flags contention (r14
-    # review; fields may be absent on old kernels). steal(7) is hypervisor
-    # time taken by OTHER guests — it can never appear in the own process
-    # tree, so counting it in busy misattributes host co-tenant pressure
-    # to in-guest foreign processes (r15: observed ~1.2 "foreign" cores on
-    # an otherwise idle guest under host steal). Exclude it; bench.py
-    # records steal separately per run (host_steal_sys_s).
-    busy = sum(vals) - vals[3] - vals[4]
-    if len(vals) > 7:
-        busy -= vals[7]
-    if len(vals) > 9:
-        busy -= vals[8] + vals[9]
-    return busy, proc_tree_cpu_jiffies(os.getpid())
+def cpu_snapshot() -> tuple[float, float]:
+    """(system busy seconds, own process-tree CPU seconds)."""
+    return cpu_times()["busy"], proc_tree_cpu_jiffies(os.getpid()) / _HZ
 
 
-def foreign_cores(before: tuple[int, int], after: tuple[int, int], wall: float) -> float:
+def foreign_cores(before: tuple[float, float], after: tuple[float, float], wall: float) -> float:
     """Average EXTERNAL cores busy during the window — contention
     evidence for a single-run measurement that cannot multi-run."""
-    import os
-
     if wall <= 0:
         return 0.0
-    hz = os.sysconf("SC_CLK_TCK")
-    foreign = max(0, (after[0] - before[0]) - (after[1] - before[1])) / hz
-    return foreign / wall
+    return max(0.0, (after[0] - before[0]) - (after[1] - before[1])) / wall

@@ -15,10 +15,11 @@ polluted by a concurrently-running gate runner (unchanged queries read
 1.5-2.3x slower at identical plans/hashes), which is exactly the noise
 that hides the next real regression. The sweep can't multi-run like
 bench.py, so each query instead measures FOREIGN CPU: system-wide busy
-jiffies (/proc/stat) minus this process tree's jiffies over the query's
-wall window. More than half an external core on average flags the row
-`contended` with the foreign-core figure, so a polluted timing column is
-self-diagnosing in both the JSONL stream and the markdown table.
+CPU seconds minus this process tree's CPU seconds over the query's wall
+window (`tools/probe_common.foreign_cores`). More than half an external
+core on average flags the row `contended` with the foreign-core figure,
+so a polluted timing column is self-diagnosing in both the JSONL stream
+and the markdown table.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from tools.probe_common import cpu_snapshot as _cpu_snapshot  # noqa: E402
 from tools.probe_common import foreign_cores as _foreign_cores  # noqa: E402
+from tools.probe_common import release_session_state  # noqa: E402
 
 FOREIGN_CORES_FLAG = 0.5  # avg external cores during the query => contended
 
@@ -99,18 +101,11 @@ def main() -> None:
         # blocks held until driver-side GC, shuffle files, JVM heap
         # pressure) inflates later queries' sweep times — r5's
         # minhash_lsh_candidates read 67.9 s in-sweep vs 32.8-42 s
-        # isolated, same code. Dropping the Python references and forcing
-        # both GCs between queries releases checkpointed blocks via the
-        # ContextCleaner and keeps sweep numbers comparable to isolated
-        # runs.
+        # isolated, same code. Dropping the Python references before the
+        # release lets the ContextCleaner free checkpointed blocks and
+        # keeps sweep numbers comparable to isolated runs.
         df = rows = None
-        import gc
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+        release_session_state(spark)
 
     hashes: dict[str, dict] = {}
     if not args.skip_hashes:

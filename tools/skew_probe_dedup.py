@@ -42,7 +42,7 @@ sys.path.insert(0, str(REPO))
 
 
 from tools.probe_common import max_task_ms as _max_task_ms
-from tools.probe_common import stage_ids as _stage_ids
+from tools.probe_common import stage_snapshot
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -87,7 +87,7 @@ def main() -> None:
                 "hot_max_group": int(gstats["max_group"]),
             }
             # --- candidate stage alone
-            before = _stage_ids(spark)
+            before = stage_snapshot(spark)
             t0 = time.monotonic()
             rec["n_candidates"] = _adaptive_pairs(docs).count()
             rec["cand_wall_s"] = round(time.monotonic() - t0, 2)
@@ -116,7 +116,7 @@ def main() -> None:
                 for k, v in confs.items():
                     spark.conf.set(k, v)
                 try:
-                    before = _stage_ids(spark)
+                    before = stage_snapshot(spark)
                     t0 = time.monotonic()
                     out = _assignments_frame(docs)
                     rows = out.collect()  # O(docs) by design; finalizes AQE

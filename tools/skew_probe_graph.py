@@ -51,7 +51,7 @@ from tools.probe_common import cpu_snapshot as _cpu_snapshot
 from tools.probe_common import foreign_cores as _foreign_cores
 from tools.probe_common import max_task_ms as _max_task_ms
 from tools.probe_common import release_session_state as _release
-from tools.probe_common import stage_ids as _stage_ids
+from tools.probe_common import stage_snapshot
 
 # what the fixture's ~90% row skew looks like to AQE at real scale,
 # shrunk to probe bytes (same emulation discipline as skew_probe_dedup)
@@ -170,7 +170,7 @@ def main() -> None:
                     for _ in range(max(1, args.runs)):
                         _release(spark)
                         cpu0 = _cpu_snapshot()
-                        before = _stage_ids(spark)
+                        before = stage_snapshot(spark)
                         t0 = time.monotonic()
                         out_rows = run()
                         wall = time.monotonic() - t0
